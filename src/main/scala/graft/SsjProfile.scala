@@ -43,9 +43,8 @@ object SsjProfile {
           .write.mode("overwrite").text(wireDir)
       }
       // experiment: state partition count for the streaming query only
-      val stateParts = sys.env.get("SSJ_STATE_PARTS")
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      stateParts.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
+      val stateParts = sys.env.get("SSJ_STATE_PARTS").map(_.toInt)
+        .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
       val parsed = graft.streaming.ProductViewPipeline.parse(
         spark.readStream.format("text")
           .option("maxFilesPerTrigger", Int.MaxValue.toString)
@@ -54,17 +53,18 @@ object SsjProfile {
         parsed.filter(col("source") === "view"),
         parsed.filter(col("source") === "purchase"))
       val q = t("streaming join round trip") {
-        val q = joined.writeStream
-          .format("parquet")
-          .option("path", outDir)
-          .option("checkpointLocation", ckptDir)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
+        val q = graft.streaming.ProductViewPipeline.startWithStateStores(spark, stateParts) {
+          joined.writeStream
+            .format("parquet")
+            .option("path", outDir)
+            .option("checkpointLocation", ckptDir)
+            .outputMode("append")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+        }
         q.awaitTermination()
         q
       }
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       q.recentProgress.foreach { p =>
         val dur = p.durationMs
         val st = p.stateOperators.map(s =>

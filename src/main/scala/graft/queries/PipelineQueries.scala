@@ -186,10 +186,8 @@ object PipelineQueries {
       // saturates at the configured parallelism and only ever REDUCES
       // partitions for small inputs. Results are partition-count
       // independent (same joined row set; the oracle hash pins it).
-      // The conf is restored before the batch read-back below; a
-      // streaming query pins its state partitioning from the conf at
-      // START, so the scoped set/restore is race-free under
-      // awaitTermination.
+      // The count applies to the start only, so the batch read-back
+      // below runs on the session's conf.
       val targetBytes = sys.env.getOrElse("SPARK_GRAFT_STATE_PART_BYTES",
         (4L * 1024 * 1024).toString).toLong
       val wireBytes = graft.model.Fs.dirBytes(wireDir)
@@ -203,8 +201,7 @@ object PipelineQueries {
       val joined = graft.streaming.Stateful.viewToPurchaseJoin(
         parsed.filter(col("source") === "view"),
         parsed.filter(col("source") === "purchase"))
-      spark.conf.set("spark.sql.shuffle.partitions", stateParts)
-      try {
+      ProductViewPipeline.startWithStateStores(spark, stateParts) {
         joined.writeStream
           .format("parquet")
           .option("path", outDir)
@@ -212,8 +209,7 @@ object PipelineQueries {
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-          .awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", confParts)
+      }.awaitTermination()
       spark.read.parquet(outDir)
         .groupBy(col("v_user").as("userid"))
         .agg(count(lit(1)).as("n_pairs"),

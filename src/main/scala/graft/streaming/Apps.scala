@@ -20,6 +20,9 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object Apps {
 
+  /** `SPARK_SHUFFLE_PARTITIONS` (default 32) is only a cap on each
+    * query's state stores: the pipeline's builders start every query on
+    * at most `defaultParallelism` of them. */
   private def session(name: String): SparkSession =
     SparkSession.builder()
       .appName(name)

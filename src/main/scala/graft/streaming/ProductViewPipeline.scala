@@ -242,53 +242,93 @@ object ProductViewPipeline {
     deduped.drop("content_key")
   }
 
-  /** v1 sink: console, update mode (reference v1:60-65). */
+  /** Starts a streaming query with `n` state stores per stateful
+    * operator: `spark.sql.shuffle.partitions` reads `n` only while
+    * `start` runs and is restored in a `finally`; a no-op when it
+    * already reads `n`. Race-free for the started query:
+    * `StreamExecution`'s constructor clones the session, so the query
+    * keeps `n` after the caller's conf is restored. A query resumed
+    * from a checkpoint keeps the count pinned in its offset log. */
+  private[graft] def startWithStateStores(spark: SparkSession, n: Int)(
+      start: => StreamingQuery): StreamingQuery = {
+    val key = "spark.sql.shuffle.partitions"
+    val conf = spark.conf.get(key)
+    if (conf.toInt == n) start
+    else {
+      spark.conf.set(key, n.toLong)
+      try start finally spark.conf.set(key, conf)
+    }
+  }
+
+  /** Starts `writer` on at most as many state stores as cores:
+    * `min(spark.sql.shuffle.partitions, defaultParallelism)`. Map-side
+    * partial aggregation means a store receives at most map tasks x
+    * (source, window) keys, not events; stores beyond the core count
+    * cannot run concurrently, and each pays a load plus a delta-file
+    * commit every batch, the empty watermark batch included. Derived
+    * from the cluster, not the input, because a Kafka stream has no
+    * input size at start. Only ever lowers the count. */
+  private def startOnCores(counts: DataFrame, writer: DataStreamWriter[Row]): StreamingQuery = {
+    val spark = counts.sparkSession
+    val conf = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    startWithStateStores(spark, math.min(conf, spark.sparkContext.defaultParallelism))(writer.start())
+  }
+
+  /** v1 sink: console, update mode (reference v1:60-65), on at most
+    * as many state stores as cores ([[startOnCores]]). */
   def consoleQuery(
       counts: DataFrame,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    counts.writeStream
+    startOnCores(counts, counts.writeStream
       .outputMode(OutputMode.Update())
       .format("console")
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      .trigger(trigger))
 
-  /** v2 foreachBatch sink: per-epoch global sort descending then emit
-    * (reference v2:8-14,77-81); `emit` defaults to console. */
+  /** v2 foreachBatch sink: per-epoch sort descending then emit
+    * (reference v2:8-14,77-81); `emit` defaults to console.
+    *
+    * The sort is `repartition(1).sortWithinPartitions`, not a global
+    * `sort`: inside foreachBatch, a range partitioner's sampling job
+    * executes the whole micro-batch plan, state-store save included,
+    * so every store would load and commit twice per batch. One
+    * partition gives the same total order in one job, and costs
+    * nothing here: the update output is bounded by sources x windows
+    * touched, and an emit collects it to the driver anyway. State
+    * stores are capped at the core count ([[startOnCores]]). */
   def sortedBatchQuery(
       counts: DataFrame,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes"))(
       emit: (DataFrame, Long) => Unit = (df, _) => df.show(20, truncate = false))
       : StreamingQuery =
-    counts.writeStream
+    startOnCores(counts, counts.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (df: DataFrame, epochId: Long) =>
-        emit(df.sort(desc("source_number")), epochId)
+        emit(df.repartition(1).sortWithinPartitions(desc("source_number")), epochId)
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      .trigger(trigger))
 
   /** v2 parquet sink: append mode — only watermark-finalized windows
     * land; (source, source_number) projection matches the reference's
     * Hive DDL `commerce(source STRING, source_number BIGINT)`
-    * (reference v2:74,84-89; dag_file.py:72-79). */
+    * (reference v2:74,84-89; dag_file.py:72-79). State stores are
+    * capped at the core count ([[startOnCores]]). */
   def parquetQuery(
       counts: DataFrame,
       outputDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    counts
+    startOnCores(counts, counts
       .drop("start", "end")
       .writeStream
       .outputMode(OutputMode.Append())
       .format("parquet")
       .option("path", outputDir)
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      .trigger(trigger))
 
   /** W8 parity — the reference's concurrent dual-sink fan-out
     * (reference v2:77-91): BOTH the sorted-console foreachBatch query
@@ -297,7 +337,15 @@ object ProductViewPipeline {
     * SURVEY.md §2.9.5). Returns both running queries; callers wait via
     * `spark.streams.awaitAnyTermination()` (the reference blocks on
     * the console query only, which silently orphans the parquet one on
-    * failure). */
+    * failure).
+    *
+    * Each query runs its stateful plan once per micro-batch: the
+    * console emit sorts one partition rather than range-partitioning
+    * (a global sort re-runs the state-store save to sample its
+    * bounds), and each query gets `min(spark.sql.shuffle.partitions,
+    * cores)` state stores, since stores beyond the core count only add
+    * a load and a commit per batch. The reference runs 2
+    * (`spark.sql.shuffle.partitions=2`, v2). */
   def dualSinkQueries(
       counts: DataFrame,
       outputDir: String,
@@ -388,14 +436,15 @@ object ProductViewPipeline {
     * per-PARTITION (never per-row, never on the driver), batches ride
     * `executeBatch`, and each epoch writes only the windows the
     * watermark actually updated — the state-store delta, not the
-    * history. */
+    * history. State stores are capped at the core count
+    * ([[startOnCores]]). */
   def jdbcUpsertQuery(
       counts: DataFrame,
       url: String,
       table: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    counts.writeStream
+    startOnCores(counts, counts.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (df: DataFrame, _: Long) =>
         df.select(col("start"), col("source"), col("source_number"))
@@ -458,6 +507,5 @@ object ProductViewPipeline {
           }
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      .trigger(trigger))
 }

@@ -1,10 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import org.scalatest.concurrent.Eventually.{eventually, timeout}
+import org.scalatest.time.{Seconds, Span}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.streaming.{ProductViewPipeline => P, Simulator}
 
 /** Streaming semantics (SURVEY.md §5.2): watermark late-drop,
@@ -239,13 +243,42 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Runs `body` with the session's shuffle partitions at `n`, restored
+    * afterwards: a cluster-sized conf above the test session's 8 cores. */
+  private def withShufflePartitions[A](n: Int)(body: => A): A = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toLong)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  private def stateStores(q: StreamingQuery): Int =
+    q.lastProgress.stateOperators(0).numShufflePartitions.toInt
+
   test("foreachBatch emits each micro-batch globally sorted descending (v2 parity)") {
+    // ... in ONE job: a global sort's range-partitioner sampling job
+    // would re-run the stateful plan, state-store commits included.
+    // Jobs started inside the emit carry the batch id as a local
+    // property; a sentinel job seen last proves every earlier job
+    // event has reached the listener.
+    val tag = "graft.test.emitBatch"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(b => jobs.computeIfAbsent(b, _ => new AtomicInteger).incrementAndGet())
+    }
+    spark.sparkContext.addSparkListener(listener)
     val in = MemoryStream[String]
     val counts = P.windowedCounts(P.parse(in.toDF()))
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
-    val q = P.sortedBatchQuery(counts, tmp(), Trigger.ProcessingTime(0)) { (df, _) =>
-      val batch = df.select("source_number").as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSeq
-      if (batch.nonEmpty) seen.synchronized { seen += batch }
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+    val q = P.sortedBatchQuery(counts, tmp(), Trigger.ProcessingTime(0)) { (df, batch) =>
+      val sc = df.sparkSession.sparkContext
+      sc.setLocalProperty(tag, batch.toString)
+      try {
+        val rows = df.select("source_number")
+          .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSeq
+        seen.synchronized { seen += batch -> rows }
+      } finally sc.setLocalProperty(tag, null)
     }
     try {
       in.addData(
@@ -253,11 +286,27 @@ class StreamingSpec extends SparkSpec {
         rec("2021-03-07 19:01:10", "mobile-app"), rec("2021-03-07 19:01:20", "mobile-web"),
         rec("2021-03-07 19:01:30", "mobile-web"), rec("2021-03-07 19:01:40", "mobile-web"))
       q.processAllAvailable()
-      val batches = seen.synchronized(seen.toList)
-      assert(batches.nonEmpty)
-      batches.foreach(b => assert(b == b.sorted.reverse, s"batch not sorted desc: $b"))
-      assert(batches.last.toSet == Set(3L, 2L, 1L))
+      in.addData(
+        rec("2021-03-07 19:03:00", "mobile-app"), rec("2021-03-07 19:03:10", "mobile-app"),
+        rec("2021-03-07 19:06:00", "desktop"))
+      q.processAllAvailable()
     } finally q.stop()
+    try {
+      spark.sparkContext.setLocalProperty(tag, "sentinel")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(tag, null)
+      eventually(timeout(Span(30, Seconds)))(assert(jobs.containsKey("sentinel")))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val batches = seen.synchronized(seen.toList)
+    val data = batches.filter(_._2.nonEmpty)
+    assert(data.size >= 2, s"expected two data micro-batches, got $batches")
+    batches.foreach { case (b, rows) =>
+      val n = Option(jobs.get(b.toString)).map(_.get)
+      assert(n.contains(1), s"batch $b ran $n jobs in its emit, expected 1")
+      assert(rows == rows.sorted.reverse, s"batch $b not sorted desc: $rows")
+    }
+    assert(data.head._2 == Seq(3L, 2L, 1L), s"first batch: ${data.head._2}")
+    assert(data(1)._2 == Seq(3L, 1L), s"second batch: ${data(1)._2}")
   }
 
   test("W8: console + parquet sinks run concurrently from ONE lineage (v2 parity)") {
@@ -294,6 +343,104 @@ class StreamingSpec extends SparkSpec {
       assert(b == b.sorted.reverse, s"console batch not sorted desc: $b"))
     val finalized = spark.read.parquet(out).as[(String, Long)].collect().toSet
     assert(finalized == Set(("desktop", 2L), ("mobile-app", 1L)), s"got $finalized")
+  }
+
+  test("every pipeline query runs on at most as many state stores as cores") {
+    val cores = spark.sparkContext.defaultParallelism
+    val srcDir = tmp()
+    Files.writeString(java.nio.file.Paths.get(srcDir, "drop.txt"), Seq(
+      rec("2021-03-07 19:01:00", "desktop"), rec("2021-03-07 19:02:00", "mobile-app"),
+      rec("2021-03-07 19:30:00", "desktop")).mkString("\n"))
+    val url = "jdbc:derby:memory:graftstreaming;create=true"
+    val c = java.sql.DriverManager.getConnection(url)
+    try c.createStatement().execute(
+      "CREATE TABLE win_stores (start_ts TIMESTAMP NOT NULL, " +
+        "source VARCHAR(32) NOT NULL, source_number BIGINT, " +
+        "PRIMARY KEY (start_ts, source))")
+    finally c.close()
+    withShufflePartitions(32) {
+      val counts = P.windowedCounts(P.parse(P.fileSource(spark, srcDir)))
+      def started(name: String)(start: => Seq[StreamingQuery]): Unit = {
+        val qs = start
+        assert(spark.conf.get("spark.sql.shuffle.partitions") == "32",
+          s"$name left the session conf changed")
+        qs.foreach { q =>
+          q.awaitTermination()
+          assert(stateStores(q) == cores, s"$name: ${stateStores(q)} state stores")
+        }
+      }
+      started("consoleQuery")(Seq(P.consoleQuery(counts, tmp(), Trigger.AvailableNow())))
+      started("parquetQuery")(Seq(P.parquetQuery(counts, tmp(), tmp(), Trigger.AvailableNow())))
+      started("dualSinkQueries") {
+        val (console, parquet) =
+          P.dualSinkQueries(counts, tmp(), tmp(), Trigger.AvailableNow())((df, _) => df.collect())
+        Seq(console, parquet)
+      }
+      started("jdbcUpsertQuery")(
+        Seq(P.jdbcUpsertQuery(counts, url, "win_stores", tmp(), Trigger.AvailableNow())))
+    }
+  }
+
+  test("v2 restart from a 32-state-store checkpoint keeps its count, loses and doubles nothing") {
+    // 120 events, 15 s apart over 30 min, three sources; the second
+    // file starts after the first file's watermark, so no event is late
+    // however the files are batched
+    val sources = Seq("desktop", "mobile-app", "mobile-web")
+    val recs = (0 until 120).map { i =>
+      rec(f"2021-03-07 19:${i / 4}%02d:${i % 4 * 15}%02d", sources(i % 3))
+    }
+    def drop(dir: String, name: String, lines: Seq[String]): Unit =
+      Files.writeString(java.nio.file.Paths.get(dir, name), lines.mkString("\n"))
+    final class Latest extends ((DataFrame, Long) => Unit) {
+      val counts = new java.util.concurrent.ConcurrentHashMap[(java.sql.Timestamp, String), Long]()
+      def apply(df: DataFrame, batch: Long): Unit =
+        df.collect().foreach(r => counts.put((r.getTimestamp(0), r.getString(2)), r.getLong(3)))
+      def toMap: Map[(java.sql.Timestamp, String), Long] = counts.asScala.toMap
+    }
+    def pipeline(dir: String): DataFrame = P.windowedCounts(P.parse(P.fileSource(spark, dir)))
+    def await(qs: (StreamingQuery, StreamingQuery)): Seq[Int] = {
+      qs._1.awaitTermination(); qs._2.awaitTermination()
+      Seq(stateStores(qs._1), stateStores(qs._2))
+    }
+    def parquetRows(out: String): Seq[(String, Long)] =
+      spark.read.parquet(out).as[(String, Long)].collect().toSeq.sorted
+
+    // uninterrupted: both files, one drain
+    val fullDir = tmp(); val fullOut = tmp(); val full = new Latest
+    drop(fullDir, "a.txt", recs.take(40)); drop(fullDir, "b.txt", recs.drop(40))
+    await(P.dualSinkQueries(pipeline(fullDir), fullOut, tmp(), Trigger.AvailableNow())(full))
+
+    // interrupted: batch 0 started the old way, on 32 state stores
+    val srcDir = tmp(); val out = tmp(); val chk = tmp(); val resumed = new Latest
+    drop(srcDir, "a.txt", recs.take(40))
+    val oldStores = withShufflePartitions(32) {
+      val counts = pipeline(srcDir)
+      await((
+        counts.writeStream.outputMode("update")
+          .foreachBatch { (df: DataFrame, batch: Long) =>
+            resumed(df.sort(desc("source_number")), batch)
+          }
+          .option("checkpointLocation", s"$chk/console")
+          .trigger(Trigger.AvailableNow()).start(),
+        counts.drop("start", "end").writeStream.outputMode("append").format("parquet")
+          .option("path", out).option("checkpointLocation", s"$chk/parquet")
+          .trigger(Trigger.AvailableNow()).start()))
+    }
+    assert(oldStores == Seq(32, 32), s"old start: $oldStores")
+    // resumed at the same conf: the builders start on 8 stores, the
+    // checkpoint's offset log overrides them
+    drop(srcDir, "b.txt", recs.drop(40))
+    val newStores = withShufflePartitions(32) {
+      await(P.dualSinkQueries(pipeline(srcDir), out, chk, Trigger.AvailableNow())(resumed))
+    }
+    assert(newStores == Seq(32, 32), s"resumed queries left the checkpoint's count: $newStores")
+
+    assert(full.toMap.size == 18 && full.toMap.values.sum == 120L, s"uninterrupted: ${full.toMap}")
+    assert(resumed.toMap == full.toMap, "latest console counts differ from an uninterrupted run")
+    // four windows (19:00-19:20) lie behind the final watermark, 19:24:45
+    val finalized = parquetRows(fullOut)
+    assert(finalized.size == 12, s"uninterrupted parquet rows: $finalized")
+    assert(parquetRows(out) == finalized, "parquet rows differ from an uninterrupted run")
   }
 
   test("timestamp pattern parses both bare and .SSS+0000 wire formats") {
