@@ -8,26 +8,12 @@ import org.apache.spark.sql.SparkSession
   * Execution is forced through the `noop` sink so the full plan runs —
   * `.count()` would let Catalyst prune away projected columns and
   * under-report (e.g. a similarity query would skip the cosine math).
-  * AQE stays on: at 100 TB scale runtime coalescing + skew-join
-  * splitting are the difference between a plan that survives and one
-  * that doesn't, so we benchmark the plans we would actually ship.
+  * Runs on [[Session.local]].
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // NOTE: driver heap cannot be set here — in local mode the JVM is
-      // already running; build.sbt's javaOptions (-Xmx via
-      // SPARK_DRIVER_MEM) is what actually sizes it.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Session.sfDir
+    val spark = Session.local()
     def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       // isolate queries: a leftover cached block or shuffle state from a
       // previous query must not tax this one's GC (round-2 bench showed a

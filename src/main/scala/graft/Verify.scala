@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
@@ -34,19 +34,13 @@ object Verify {
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [<query> ...]")
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing query names: dump only those (fast iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // write µs timestamps (not INT96) so DuckDB reads the same type
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    // write µs timestamps (not INT96) so DuckDB reads the same type
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     // stale-output guard: a query that fails BEFORE its overwrite-write
     // executes (e.g. an AnalysisException at plan time) must not leave
@@ -62,7 +56,7 @@ object Verify {
         // isolate queries, same rule as Bench: several queries persist
         // internal relations by design (dedupClusters, curationFunnel,
         // exactSubstring, heavyHitters) — a leftover block must not
-        // occupy this local[4] JVM for the rest of the full battery
+        // occupy this JVM for the rest of the full battery
         spark.catalog.clearCache()
         try {
           graft.model.Fs.wipeOrThrow(s"$outDir/$name")

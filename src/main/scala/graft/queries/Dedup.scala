@@ -103,7 +103,7 @@ object Dedup {
   private[graft] val jaccardMaxDf = 256
 
   /** Hot posting lists (df > maxDf) of an exploded index — the
-    * COMPLEMENT of [[cappedIndex]]'s keep set as a tiny hk list:
+    * COMPLEMENT of the df-capped index's keep set as a tiny hk list:
     * a map-side-combined groupBy (each mapper contributes one partial
     * count per distinct shingle), never a window sort over every
     * exploded row. Shared by the anti-join cap spelling below and the
@@ -115,31 +115,15 @@ object Dedup {
     e.groupBy(col("hk")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select(col("hk"))
 
-  /** The df-capped inverted index over exploded rows
-    * (doc_id, n_sh, hk) as a WINDOW: drops shingles whose posting list
-    * exceeds `maxDf`. RETIRED from query paths (r18 verdict task 1):
-    * `Window.partitionBy(hk)` has no map-side combine and no AQE skew
-    * carve, so at a 100 TB boilerplate shape a df≈10⁹ shingle's every
-    * exploded row flows through ONE task's window sort buffer before
-    * the cap can drop it — the exact single-task hot-bucket shape r18
-    * removed from the band stars. Every query path now goes through
-    * [[cappedIndexAdaptive]]; this spelling stays only as the
-    * equivalence witness BoilerplateRescueSpec pins the adaptive
-    * spelling against on a binding corpus. */
-  private[graft] def cappedIndex(e: DataFrame, maxDf: Int): DataFrame =
-    e.withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("hk"))))
-      .filter(col("df") <= maxDf).drop("df")
-
   /** The df cap as [[hotShingles]] anti-join behind the
     * materialized-hot short-circuit — [[dupGraphEdgesFrom]]'s r18
     * pattern applied to the standalone straight-from-scan callers
     * (q_dedup_ngram_jaccard, q_dedup_jaccard_capped,
     * q_dedup_containment, q_source_overlap, q_dedup_fuzzy,
     * q_minhash_estimate; r18 verdict task 1, closing the last
-    * skewed-key window in the engine). Semantics identical to
-    * [[cappedIndex]] by construction — df <= cap ⇔ hk ∉ hot — in BOTH
-    * regimes (BoilerplateRescueSpec pins the binding case):
+    * skewed-key window in the engine). Semantics identical to the
+    * retired window cap by construction — df <= cap ⇔ hk ∉ hot — in
+    * BOTH regimes (BoilerplateRescueSpec pins the binding case):
     *
     *   - hot EMPTY (both driver fixtures: max df 7 at sf0.01, 25 at
     *     sf0.1): the cap binds nothing, kept == e exactly, and the
@@ -192,17 +176,17 @@ object Dedup {
       .select(col("doc_id"), col("n_sh"), explode(col("shs")).as("hk"))
 
   /** The LAZY hot-shingle derivation over the default corpus, for
-    * [[graft.EdgePlan]] (r18 ADVICE: inside [[dupGraphEdgesFrom]] the
+    * [[graft.Inspect]]: inside [[dupGraphEdgesFrom]] the
     * hot list is eagerly checkpointed, so the edge plan shows it only
     * as an opaque RDD scan — this exposes the pre-checkpoint plan for
-    * inspection). */
+    * inspection. */
   private[graft] def hotShinglesPlan(spark: SparkSession, dir: String): DataFrame = {
     val e = withShingles(Tables.documents(spark, dir))
       .select(col("doc_id"), col("n_sh"), explode(col("shs")).as("hk"))
     hotShingles(e, jaccardMaxDf)
   }
 
-  /** DuckDB CTE mirroring [[cappedIndex]]: defines `jk(doc_id, n_sh,
+  /** DuckDB CTE of the df cap as a window: defines `jk(doc_id, n_sh,
     * hk)` over `fromCte`. */
   private[queries] def cappedIndexCte(fromCte: String, maxDf: Int): String = s"""
       jk AS (SELECT doc_id, n_sh, hk FROM (

@@ -120,6 +120,9 @@ object PipelineQueries {
       GROUP BY 1
     """))
 
+  /** Wire bytes per stream-stream-join state partition. */
+  private val statePartBytes = 4L * 1024 * 1024
+
   /** Watermarked stream-stream join, run as a REAL streaming query
     * (r16 verdict task 5 — the one §2.7 capability that had no oracled
     * entry): the wire JSON lands as text, a streaming read parses it,
@@ -174,26 +177,24 @@ object PipelineQueries {
       // stores per shuffle partition, each paying delta-file write +
       // commit PER BATCH (including the final watermark-commit empty
       // batch), so per-partition fixed cost dominates when the
-      // per-partition input is small. SsjProfile on sf0.1 (100k
+      // per-partition input is small. Measured on sf0.1 (100k
       // events, ~19 MB wire, 32 conf partitions): warm round trip
       // 7.8 s -> 2.2 s at 4 partitions; the empty eviction batch
       // alone 3.2 s -> 0.6 s; the r18 driver's 8-core run was 2.3x
       // faster than 32-core on this query for exactly this reason.
       // Derivation mirrors AQE's advisory sizing: one state partition
-      // per SPARK_GRAFT_STATE_PART_BYTES of wire input (default 4 MB),
-      // min 2, CAPPED at the session's configured shuffle partitions —
+      // per statePartBytes of wire input, min 2, CAPPED at the
+      // session's configured shuffle partitions —
       // so on a cluster-sized conf with 100 TB of wire the formula
       // saturates at the configured parallelism and only ever REDUCES
       // partitions for small inputs. Results are partition-count
       // independent (same joined row set; the oracle hash pins it).
       // The count applies to the start only, so the batch read-back
       // below runs on the session's conf.
-      val targetBytes = sys.env.getOrElse("SPARK_GRAFT_STATE_PART_BYTES",
-        (4L * 1024 * 1024).toString).toLong
       val wireBytes = graft.model.Fs.dirBytes(wireDir)
       val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val stateParts = math.max(2L, math.min(
-        (wireBytes + targetBytes - 1) / targetBytes, confParts.toLong)).toInt
+        (wireBytes + statePartBytes - 1) / statePartBytes, confParts.toLong)).toInt
       val parsed = ProductViewPipeline.parse(
         spark.readStream.format("text")
           .option("maxFilesPerTrigger", Int.MaxValue.toString)

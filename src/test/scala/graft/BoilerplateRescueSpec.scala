@@ -224,10 +224,10 @@ class BoilerplateRescueSpec extends SparkSpec {
     // df <= cap ⇔ hk ∉ hot — but the equivalence is only NON-VACUOUS
     // on a corpus where some shingle exceeds the cap, which no driver
     // fixture provides; pin it here, on this one, so the spellings
-    // can never silently drift. cappedIndex (the retired window) stays
-    // in the code exactly as this test's equivalence witness.
+    // can never silently drift. The retired window lives on in test
+    // sources (DedupWitness) exactly as this test's equivalence witness.
     val (_, e) = corpus
-    val windowKept = Dedup.cappedIndex(e, Dedup.jaccardMaxDf)
+    val windowKept = DedupWitness.cappedIndex(e, Dedup.jaccardMaxDf)
     val antiKept = Dedup.cappedIndexAdaptive(e, Dedup.jaccardMaxDf)
     assert(antiKept.count() === windowKept.count())
     assert(antiKept.exceptAll(windowKept).count() === 0L &&

@@ -363,7 +363,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // regression band the cap must sit below
     val uncapped = Dedup.sharedCounts(e).count()
     assert(uncapped >= 300L * 299 / 2, s"fixture lost its hot shingle: $uncapped")
-    val capped = Dedup.sharedCounts(Dedup.cappedIndex(e, Dedup.jaccardMaxDf)).count()
+    val capped = Dedup.sharedCounts(DedupWitness.cappedIndex(e, Dedup.jaccardMaxDf)).count()
     assert(capped == 1,
       s"helper cap must collapse candidates to the planted pair, got $capped")
     val pairs = Dedup.jaccardPairs(e).collect()

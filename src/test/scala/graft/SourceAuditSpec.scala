@@ -119,6 +119,17 @@ class SourceAuditSpec extends AnyFunSuite {
           "action")))
   }
 
+  test("SparkSession.builder confined to the session factory and two audited sessions") {
+    audit("SparkSession.builder", """SparkSession\.builder""", Map(
+      "Session.scala" -> (1,
+        "the one local session Bench, Verify, Inspect and the tests share"),
+      "streaming/Apps.scala" -> (1,
+        "SPARK_MASTER is a deployment address, not a local core count; " +
+          "the benchmark's replay session copies this one"),
+      "CatalogRoundTrip.scala" -> (1,
+        "needs Hive support and its own Derby metastore")))
+  }
+
   test("collected-array sorts audited for null sort keys (Spark vs DuckDB place them oppositely)") {
     // r15 NOTES open thread, r16 verdict task 6: Spark's sort_array
     // AND array_sort place a NULL scalar element / null leading struct

@@ -71,13 +71,7 @@ object SyntheticEmbeddings {
 
   def main(args: Array[String]): Unit = {
     val (n, dir) = (args(0).toLong, args(1))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     write(spark, n, dir)
     spark.stop()
   }
