@@ -202,15 +202,14 @@ object PipelineQueries {
       val joined = graft.streaming.Stateful.viewToPurchaseJoin(
         parsed.filter(col("source") === "view"),
         parsed.filter(col("source") === "purchase"))
-      ProductViewPipeline.startWithStateStores(spark, stateParts) {
+      ProductViewPipeline.startWithStateStores(spark, stateParts)(
         joined.writeStream
           .format("parquet")
           .option("path", outDir)
           .option("checkpointLocation", ckptDir)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }.awaitTermination()
+      ).awaitTermination()
       spark.read.parquet(outDir)
         .groupBy(col("v_user").as("userid"))
         .agg(count(lit(1)).as("n_pairs"),

@@ -105,8 +105,10 @@ object ProductViewPipeline {
       goodDir: String,
       deadDir: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    withRaw.writeStream
+      trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery = {
+    val spark = withRaw.sparkSession
+    // stateless: starts on the session's own partition count
+    startWithStateStores(spark, spark.conf.get(shufflePartitions).toInt)(withRaw.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (df: DataFrame, epochId: Long) =>
         df.persist()
@@ -124,8 +126,8 @@ object ProductViewPipeline {
         } finally df.unpersist()
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+      .trigger(trigger))
+  }
 
   /** Does the stream already carry an event-time watermark on THIS
     * column? Stateful transforms ([[dedupedByContent]],
@@ -242,22 +244,32 @@ object ProductViewPipeline {
     deduped.drop("content_key")
   }
 
-  /** Starts a streaming query with `n` state stores per stateful
-    * operator: `spark.sql.shuffle.partitions` reads `n` only while
-    * `start` runs and is restored in a `finally`; a no-op when it
-    * already reads `n`. Race-free for the started query:
-    * `StreamExecution`'s constructor clones the session, so the query
-    * keeps `n` after the caller's conf is restored. A query resumed
-    * from a checkpoint keeps the count pinned in its offset log. */
+  private val shufflePartitions = "spark.sql.shuffle.partitions"
+  private val checkpointFileManager = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Starts `writer`: every streaming query in the program starts here
+    * (SourceAuditSpec pins it).
+    *
+    * Installs [[LocalCheckpointFileManager]] as the session's checkpoint
+    * manager unless one is configured already, and leaves it set: the
+    * file source builds its `sources/` metadata log on the stream thread,
+    * from the session that created the source, after `start` returns.
+    *
+    * Each stateful operator gets `n` state stores:
+    * `spark.sql.shuffle.partitions` reads `n` only during the start and
+    * is restored in a `finally`. The query keeps `n` because
+    * `StreamExecution`'s constructor clones the session, and settings
+    * read from that clone are fixed at `start`. That holds for the
+    * query's own reads, not for the source log above, which is why the
+    * manager is left set. A query resumed from a checkpoint keeps the
+    * count pinned in its offset log. */
   private[graft] def startWithStateStores(spark: SparkSession, n: Int)(
-      start: => StreamingQuery): StreamingQuery = {
-    val key = "spark.sql.shuffle.partitions"
-    val conf = spark.conf.get(key)
-    if (conf.toInt == n) start
-    else {
-      spark.conf.set(key, n.toLong)
-      try start finally spark.conf.set(key, conf)
-    }
+      writer: DataStreamWriter[_]): StreamingQuery = {
+    if (spark.conf.getOption(checkpointFileManager).isEmpty)
+      spark.conf.set(checkpointFileManager, classOf[LocalCheckpointFileManager].getName)
+    val conf = spark.conf.get(shufflePartitions)
+    spark.conf.set(shufflePartitions, n.toLong)
+    try writer.start() finally spark.conf.set(shufflePartitions, conf)
   }
 
   /** Starts `writer` on at most as many state stores as cores:
@@ -270,8 +282,8 @@ object ProductViewPipeline {
     * input size at start. Only ever lowers the count. */
   private def startOnCores(counts: DataFrame, writer: DataStreamWriter[Row]): StreamingQuery = {
     val spark = counts.sparkSession
-    val conf = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    startWithStateStores(spark, math.min(conf, spark.sparkContext.defaultParallelism))(writer.start())
+    val conf = spark.conf.get(shufflePartitions).toInt
+    startWithStateStores(spark, math.min(conf, spark.sparkContext.defaultParallelism))(writer)
   }
 
   /** v1 sink: console, update mode (reference v1:60-65), on at most

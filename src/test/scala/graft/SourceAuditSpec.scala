@@ -130,6 +130,19 @@ class SourceAuditSpec extends AnyFunSuite {
         "needs Hive support and its own Derby metastore")))
   }
 
+  test("DataStreamWriter.start() only inside ProductViewPipeline.startWithStateStores") {
+    // the one start path: it installs the checkpoint manager and sets
+    // the query's state-store count, so a query started elsewhere forks
+    // per checkpoint file and keeps the session's full partition count
+    val file = "streaming/ProductViewPipeline.scala"
+    audit(".start()", """\.start\(\)""", Map(file -> (1, "startWithStateStores")))
+    val src = Files.readString(root.resolve(file))
+    val at = src.indexOf(".start()")
+    val enclosing = """def (\w+)""".r.findAllMatchIn(src.take(at)).toSeq.lastOption.map(_.group(1))
+    assert(at < 0 || enclosing.contains("startWithStateStores"),
+      s"$file starts a query in ${enclosing.getOrElse("no def")}, not startWithStateStores")
+  }
+
   test("collected-array sorts audited for null sort keys (Spark vs DuckDB place them oppositely)") {
     // r15 NOTES open thread, r16 verdict task 6: Spark's sort_array
     // AND array_sort place a NULL scalar element / null leading struct

@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.concurrent.Eventually.{eventually, timeout}
 import org.scalatest.time.{Seconds, Span}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.streaming.{ProductViewPipeline => P, Simulator}
+import graft.streaming.{LocalCheckpointFileManager, ProductViewPipeline => P, Simulator}
 
 /** Streaming semantics (SURVEY.md §5.2): watermark late-drop,
   * update-mode re-emission, append-mode finalize-once, checkpoint
@@ -254,6 +255,24 @@ class StreamingSpec extends SparkSpec {
   private def stateStores(q: StreamingQuery): Int =
     q.lastProgress.stateOperators(0).numShufflePartitions.toInt
 
+  private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val sparkManager = classOf[FileContextBasedCheckpointFileManager].getName
+  private val localManager = classOf[LocalCheckpointFileManager].getName
+
+  /** Runs `body` with the session's checkpoint manager set to `cls`, or
+    * unset for None, and puts the previous setting back afterwards. */
+  private def withCheckpointManager[A](cls: Option[String])(body: => A): A = {
+    def put(v: Option[String]): Unit = v.fold(spark.conf.unset(managerKey))(spark.conf.set(managerKey, _))
+    val prev = spark.conf.getOption(managerKey)
+    put(cls)
+    try body finally put(prev)
+  }
+
+  /** The checkpoint manager the query's own session ran. */
+  private def managerOf(q: StreamingQuery): String =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+      .sparkSession.conf.getOption(managerKey).getOrElse("unset")
+
   test("foreachBatch emits each micro-batch globally sorted descending (v2 parity)") {
     // ... in ONE job: a global sort's range-partitioner sampling job
     // would re-run the stateful plan, state-store commits included.
@@ -413,27 +432,37 @@ class StreamingSpec extends SparkSpec {
     // interrupted: batch 0 started the old way, on 32 state stores
     val srcDir = tmp(); val out = tmp(); val chk = tmp(); val resumed = new Latest
     drop(srcDir, "a.txt", recs.take(40))
-    val oldStores = withShufflePartitions(32) {
-      val counts = pipeline(srcDir)
-      await((
-        counts.writeStream.outputMode("update")
-          .foreachBatch { (df: DataFrame, batch: Long) =>
-            resumed(df.sort(desc("source_number")), batch)
-          }
-          .option("checkpointLocation", s"$chk/console")
-          .trigger(Trigger.AvailableNow()).start(),
-        counts.drop("start", "end").writeStream.outputMode("append").format("parquet")
-          .option("path", out).option("checkpointLocation", s"$chk/parquet")
-          .trigger(Trigger.AvailableNow()).start()))
+    // and under Spark's default checkpoint manager
+    val (oldStores, oldManagers) = withShufflePartitions(32) {
+      withCheckpointManager(Some(sparkManager)) {
+        val counts = pipeline(srcDir)
+        val qs = (
+          counts.writeStream.outputMode("update")
+            .foreachBatch { (df: DataFrame, batch: Long) =>
+              resumed(df.sort(desc("source_number")), batch)
+            }
+            .option("checkpointLocation", s"$chk/console")
+            .trigger(Trigger.AvailableNow()).start(),
+          counts.drop("start", "end").writeStream.outputMode("append").format("parquet")
+            .option("path", out).option("checkpointLocation", s"$chk/parquet")
+            .trigger(Trigger.AvailableNow()).start())
+        (await(qs), Seq(managerOf(qs._1), managerOf(qs._2)))
+      }
     }
     assert(oldStores == Seq(32, 32), s"old start: $oldStores")
-    // resumed at the same conf: the builders start on 8 stores, the
-    // checkpoint's offset log overrides them
+    assert(oldManagers == Seq(sparkManager, sparkManager), s"old start: $oldManagers")
+    // resumed at the same conf: the builders start on 8 stores and
+    // install the local manager, the checkpoint's offset log overrides
+    // the store count
     drop(srcDir, "b.txt", recs.drop(40))
-    val newStores = withShufflePartitions(32) {
-      await(P.dualSinkQueries(pipeline(srcDir), out, chk, Trigger.AvailableNow())(resumed))
+    val (newStores, newManagers) = withShufflePartitions(32) {
+      withCheckpointManager(None) {
+        val qs = P.dualSinkQueries(pipeline(srcDir), out, chk, Trigger.AvailableNow())(resumed)
+        (await(qs), Seq(managerOf(qs._1), managerOf(qs._2)))
+      }
     }
     assert(newStores == Seq(32, 32), s"resumed queries left the checkpoint's count: $newStores")
+    assert(newManagers == Seq(localManager, localManager), s"resumed: $newManagers")
 
     assert(full.toMap.size == 18 && full.toMap.values.sum == 120L, s"uninterrupted: ${full.toMap}")
     assert(resumed.toMap == full.toMap, "latest console counts differ from an uninterrupted run")
@@ -441,6 +470,78 @@ class StreamingSpec extends SparkSpec {
     val finalized = parquetRows(fullOut)
     assert(finalized.size == 12, s"uninterrupted parquet rows: $finalized")
     assert(parquetRows(out) == finalized, "parquet rows differ from an uninterrupted run")
+  }
+
+  /** Two files of events spanning windows behind the final watermark,
+    * so a drain writes state, both logs and parquet rows. */
+  private def twoFileInput(): String = {
+    val dir = tmp()
+    val sources = Seq("desktop", "mobile-app", "mobile-web")
+    val recs = (0 until 60).map(i => rec(f"2021-03-07 19:${i / 2}%02d:${i % 2 * 30}%02d", sources(i % 3)))
+    Files.writeString(java.nio.file.Paths.get(dir, "a.txt"), recs.take(30).mkString("\n"))
+    Files.writeString(java.nio.file.Paths.get(dir, "b.txt"), recs.drop(30).mkString("\n"))
+    dir
+  }
+
+  /** Drains `srcDir` through `dualSinkQueries` into `base/out`, with
+    * checkpoints under `base/chk`; returns both queries. */
+  private def drainDual(srcDir: String, base: String): (StreamingQuery, StreamingQuery) = {
+    val counts = P.windowedCounts(P.parse(P.fileSource(spark, srcDir)))
+    val qs = P.dualSinkQueries(counts, s"$base/out", s"$base/chk", Trigger.AvailableNow())((df, _) => df.collect())
+    qs._1.awaitTermination(); qs._2.awaitTermination()
+    qs
+  }
+
+  test("a local dual-sink drain starts no process under its checkpoints or its sink log") {
+    // without libhadoop, Spark's default manager forks chmod for every
+    // checkpoint file and readlink on every rename; jdk.ProcessStart
+    // counts the forks whatever the machine's speed. The parquet data
+    // files are written through Hadoop's FileSystem, not a checkpoint
+    // manager, and still fork chmod for the file and its .crc.
+    val srcDir = twoFileInput(); val base = tmp()
+    val canary = "graft-process-start-canary"
+    val recording = new jdk.jfr.Recording()
+    val dump = Files.createTempFile("graft-forks", ".jfr")
+    try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      withCheckpointManager(None)(drainDual(srcDir, base))
+      new ProcessBuilder("true", canary).start().waitFor()
+      recording.stop()
+      recording.dump(dump)
+    } finally recording.close()
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+    Files.delete(dump)
+    assert(commands.exists(_.contains(canary)), s"the recording missed the canary: $commands")
+    val forks = commands.filter(c => c.contains(s"$base/chk/") || c.contains(s"$base/out/_spark_metadata"))
+    assert(forks.isEmpty, s"${forks.size} processes started under $base: ${forks.take(5)}")
+  }
+
+  test("the local manager writes the same files, with the same modes, as Spark's default") {
+    val srcDir = twoFileInput()
+    val sparkBase = tmp(); val localBase = tmp()
+    val sparkRun = withCheckpointManager(Some(sparkManager))(drainDual(srcDir, sparkBase))
+    val localRun = withCheckpointManager(None)(drainDual(srcDir, localBase))
+    assert(Seq(sparkRun._1, sparkRun._2).map(managerOf) == Seq(sparkManager, sparkManager))
+    assert(Seq(localRun._1, localRun._2).map(managerOf) == Seq(localManager, localManager))
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+    // relative name (temp-file UUIDs masked) -> POSIX mode
+    def tree(root: java.nio.file.Path): Map[String, String] =
+      if (!Files.exists(root)) Map.empty
+      else Files.walk(root).iterator().asScala.filter(_ != root).map { f =>
+        uuid.replaceAllIn(root.relativize(f).toString, "<uuid>") ->
+          java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(f))
+      }.toMap
+    for (sub <- Seq("chk", "out/_spark_metadata")) {
+      val expected = tree(java.nio.file.Paths.get(sparkBase, sub))
+      val got = tree(java.nio.file.Paths.get(localBase, sub))
+      assert(expected.keys.exists(_.endsWith(".crc")), s"$sub: no checksum sidecars in $expected")
+      assert(got.keySet == expected.keySet,
+        s"$sub: only Spark's: ${expected.keySet -- got.keySet}; only local: ${got.keySet -- expected.keySet}")
+      val modes = expected.keys.toSeq.sorted.filter(k => got(k) != expected(k)).map(k => s"$k ${expected(k)} ${got(k)}")
+      assert(modes.isEmpty, s"$sub: modes differ: $modes")
+    }
   }
 
   test("timestamp pattern parses both bare and .SSS+0000 wire formats") {

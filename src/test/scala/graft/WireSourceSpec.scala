@@ -243,14 +243,19 @@ class WireSourceSpec extends SparkSpec {
       p.getFileName.toString.startsWith("part-")).findFirst().get()
     val perFile = Files.lines(src).count()
     assert(perFile > 0)
-    Files.copy(src, dir.resolve("part-zz-extra1.txt"))
+    // copied under a hidden name, then renamed: a census that lists a
+    // file mid-copy would admit a torn prefix of it
+    def land(name: String): Unit = Files.move(
+      Files.copy(src, dir.resolve(s".$name.tmp")), dir.resolve(name),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    land("part-zz-extra1.txt")
     q.processAllAvailable()
     assert(got.size === n0 + perFile)
     q.stop()
 
     // restart from the checkpoint with a file added while DOWN: exactly
     // the unseen file replays, nothing already-committed re-emits
-    Files.copy(src, dir.resolve("part-zz-extra2.txt"))
+    land("part-zz-extra2.txt")
     val q2 = start()
     q2.processAllAvailable()
     assert(got.size === n0 + 2 * perFile)
