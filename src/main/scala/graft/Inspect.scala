@@ -50,9 +50,7 @@ object Inspect {
       case _ => throw new IllegalArgumentException(usage)
     }
     val known = frames
-    val unknown = names.filterNot(known.contains)
-    require(unknown.isEmpty,
-      s"unknown name(s) ${unknown.mkString(", ")}; known: ${known.keys.toSeq.sorted.mkString(", ")}")
+    requireKnown(names, known.keys)
     out.foreach(Files.createDirectories(_))
     names.map { name =>
       // a block a previous query left cached must not serve this one
@@ -67,6 +65,13 @@ object Inspect {
       }
       text
     }
+  }
+
+  /** Fails naming each of `names` not in `known`, and every known name. */
+  private[graft] def requireKnown(names: Seq[String], known: Iterable[String]): Unit = {
+    val unknown = names.filterNot(known.toSet)
+    require(unknown.isEmpty,
+      s"unknown name(s) ${unknown.mkString(", ")}; known: ${known.toSeq.sorted.mkString(", ")}")
   }
 
   /** Runs every partition of every operator of the frame's OWN
@@ -87,7 +92,9 @@ object Inspect {
     adaptive.map(_.executedPlan).getOrElse(executed).toString
   }
 
-  private final class Counts extends SparkListener {
+  /** Listener totals since registration; read them after
+    * [[ListenerBridge.drain]]. The one listener Bench and Inspect share. */
+  private[graft] final class Counts extends SparkListener {
     @volatile var jobs, stages, tasks, cpuNs, gcMs, readB, writeB, spillB = 0L
     override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages += 1

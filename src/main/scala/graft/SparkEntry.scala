@@ -27,21 +27,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.windowCount.fn(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
+  /** Every registered query with its oracle and its tags (Bench reads
+    * the tags). */
+  def all: Seq[Q] = {
     // a duplicated name would silently drop a query from both gates
     val dups = modules.groupBy(_.name).filter(_._2.size > 1).keys
     require(dups.isEmpty, s"duplicate query names registered: ${dups.mkString(", ")}")
-    modules.map(q => q.name -> q.fn).toMap
+    modules
   }
+
+  /** One entry per implemented operator from SURVEY.md §2. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     modules.flatMap(q => q.oracle.map(o => q.name -> o.trim)).toMap
-
-  /** Measurement metadata per query (see [[graft.model.Q]] `tags`) —
-    * consumed by Bench, never by the driver contract. */
-  def queryTags: Map[String, Set[String]] =
-    modules.filter(_.tags.nonEmpty).map(q => q.name -> q.tags).toMap
 }

@@ -2005,7 +2005,8 @@ object Similarity {
       FROM rr LEFT JOIN exact ON rr.q_id = exact.q_id
               JOIN qc ON rr.q_id = qc.q_id
               LEFT JOIN asn nc ON exact.exact_nn = nc.vec_id
-    """))
+    """),
+    tags = Set("measurement-only"))
 
   /** SemDeDup-style embedding outliers (Abbas et al. 2023 use
     * centroid distance WITHIN clusters to drop semantic duplicates

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,18 +22,18 @@ class SourceAuditSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
 
-  private def sites(needle: String): Map[String, Int] =
-    Files.walk(root).iterator().asScala
+  private def sites(needle: String, under: Path): Map[String, Int] =
+    Files.walk(under).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .map { p =>
         val n = needle.r.findAllIn(Files.readString(p)).size
-        root.relativize(p).toString -> n
+        under.relativize(p).toString -> n
       }
       .filter(_._2 > 0).toMap
 
   private def audit(name: String, needle: String,
-                    allowed: Map[String, (Int, String)]): Unit = {
-    val found = sites(needle)
+                    allowed: Map[String, (Int, String)], under: Path = root): Unit = {
+    val found = sites(needle, under)
     val extra = found.toSeq.sortBy(_._1).flatMap { case (f, n) =>
       val cap = allowed.get(f).map(_._1).getOrElse(0)
       if (n > cap) Some(s"$f: $n sites (audited $cap)") else None
@@ -128,6 +128,16 @@ class SourceAuditSpec extends AnyFunSuite {
           "the benchmark's replay session copies this one"),
       "CatalogRoundTrip.scala" -> (1,
         "needs Hive support and its own Derby metastore")))
+  }
+
+  test("one SparkListener subclass in src/main: the listener Bench and Inspect share") {
+    // per-tool stopwatches and listeners drift apart; Bench's per-rep
+    // cpu_s and Inspect's profile read the same counts
+    val needle = """(extends|new)\s+([\w.]+\.)?SparkListener\b"""
+    val main = Paths.get("src/main/scala")
+    audit("SparkListener subclass", needle, Map(
+      "graft/Inspect.scala" -> (1, "the one listener Bench and Inspect share")), main)
+    assert(sites(needle, main) == Map("graft/Inspect.scala" -> 1))
   }
 
   test("DataStreamWriter.start() only inside ProductViewPipeline.startWithStateStores") {
