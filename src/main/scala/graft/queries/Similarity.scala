@@ -642,7 +642,8 @@ object Similarity {
       s" ELSE ${srpRungs.last} END"
 
   /** Multi-probe SRP collision pairs (q_id, c_id) — the candidate
-    * generator behind [[annSrp]] and [[mmrRerankAnn]]. Each vector is
+    * generator behind [[annSrp]], [[mmrRerankAnn]] and
+    * [[mutualKnnEdges]]. Each vector is
     * indexed under its per-table sign-bit bucket; the query side
     * additionally probes the bucket with its weakest sign bit flipped.
     * `queryPred` (on `vec_id`) restricts the QUERY side BEFORE the
@@ -655,7 +656,20 @@ object Similarity {
     * [[Tables.cachedRowCount]] (one count job per directory snapshot
     * per session; four queries call this generator per round, and the
     * per-invocation count() it replaces ran BEFORE the checkpoint so
-    * it could never reuse the index build — ADVICE r12). */
+    * it could never reuse the index build — ADVICE r12).
+    *
+    * `withCos` scores each pair WHERE IT IS MADE: both join sides carry
+    * their vector and norm, and the output gains
+    * `cos = dot(qv, cv) / (qnrm * cnrm)` (unrounded; each reranker
+    * applies its own 6dp / ppm rounding). A vector then crosses the
+    * shuffle once per (table, probe) it occupies — 8 index rows and
+    * 16 probe rows — instead of twice per candidate pair, and the
+    * caller's per-query aggregate takes its map-side partial right on
+    * the join output, so no pair row is ever exchanged. Joining the
+    * vectors onto the slim pairs instead sort-merge-shuffled two
+    * 64-double vectors per pair: ~216 pairs per query, 6.4 GB spilled
+    * at n = 60,000 and the local disk exhausted at 240,000. Without
+    * `withCos` (the pairs-only count path) the index stays slim. */
   /** Partition count for a shuffled-hash-join BUILD side of ~`rows`
     * total rows: SHJ build memory is per PARTITION, not per key — the
     * conf knob (default 32) hands each build task corpus-proportional
@@ -666,7 +680,7 @@ object Similarity {
     * stays free to coalesce the small-bytes partitions back together
     * and to skew-split (both supported for SHJ). `rowsPerPartition`
     * is width-aware at each call site (slim id+bucket rows vs rows
-    * carrying a 64-double vector).
+    * carrying a 64-double vector — [[srpProbePairs]] picks per mode).
     *
     * Returns None while the conf knob already covers the build (the
     * fixture regime): an EXPLICIT user repartition pins its partition
@@ -682,44 +696,48 @@ object Similarity {
   }
 
   private[graft] def srpProbePairs(spark: SparkSession, dir: String,
-                                   queryPred: Option[Column] = None): DataFrame = {
+                                   queryPred: Option[Column] = None,
+                                   withCos: Boolean = false): DataFrame = {
     val nTables = 8
     val nRows = Tables.cachedRowCount(spark, dir, "embeddings")
     val nBits = srpBitsLadder(nRows)
     val planes = srpPlanes(nTables, nBits)
     val e = emb(spark, dir).select(col("vec_id"), col("vd"), col("nrm"))
+    // the scored mode's payload, renamed per side below
+    def vec(v: String, n: String): Seq[Column] =
+      if (withCos) Seq(col("vd").as(v), col("nrm").as(n)) else Nil
     // buckets AND weakest-bit flipped probes in one compiled kernel
     // pass per vector ([[srpBucketArray]]; the per-plane literal-tree
     // spelling this replaced is preserved bit-for-bit — the
     // VectorExpressionsSpec srp_buckets test pins the equality)
     val base = e
       .withColumn("bf", srpBucketArray(planes, withProbes = true))
-      .select(col("vec_id"),
+      .select(Seq(col("vec_id"),
         slice(col("bf"), 1, nTables).as("bks"),
-        slice(col("bf"), nTables + 1, nTables).as("fps"))
+        slice(col("bf"), nTables + 1, nTables).as("fps")) ++
+        vec("vd", "nrm"): _*)
       // BUILD THE INDEX ONCE: both join sides (query probes, index
       // buckets) read `base`, and without a materialization the
       // 40-plane-dot + bucket/flip derivation runs twice per action
       // (each side is its own stage). This is exactly "index build" in
       // a production ANN system — the checkpointed form is vec_id +
-      // 16 longs, far narrower than the embeddings it derives from.
-      // Measured at sf0.1 (5 reps): q_mmr_rerank_ann 2.5 -> 2.1 s;
-      // q_ann_srp unchanged at ~3.5 s (its cost is the collision
-      // rerank, not the derivation).
+      // 16 longs, plus the vector and norm only in the scored mode
+      // that reads them.
       .localCheckpoint()
     // query side: 2 probes per table (true bucket j=0, flipped j=1)
     val xs = queryPred.fold(base)(base.filter)
-      .select(col("vec_id").as("q_id"), col("bks").as("xbks"),
+      .select(Seq(col("vec_id").as("q_id"), col("bks").as("xbks"),
         col("fps").as("xfps"),
         explode(expr(
           s"""flatten(transform(sequence(0, ${nTables - 1}),
                 t -> array(named_struct('t', t, 'j', 0, 'pb', bks[t]),
-                           named_struct('t', t, 'j', 1, 'pb', fps[t]))))""")).as("p"))
-      .select(col("q_id"), col("xbks"), col("xfps"),
-        col("p.t").as("t"), col("p.j").as("j"), col("p.pb").as("pb"))
+                           named_struct('t', t, 'j', 1, 'pb', fps[t]))))""")).as("p")) ++
+        vec("qv", "qnrm"): _*)
+      .withColumns(Map("t" -> col("p.t"), "j" -> col("p.j"), "pb" -> col("p.pb")))
+      .drop("p")
     // index side: true buckets only (multi-probe is query-side)
-    val ys = base.select(col("vec_id").as("c_id"), col("bks").as("ybks"),
-      posexplode(col("bks")).as(Seq("yt", "bucket")))
+    val ys = base.select(Seq(col("vec_id").as("c_id"), col("bks").as("ybks"),
+      posexplode(col("bks")).as(Seq("yt", "bucket"))) ++ vec("cv", "cnrm"): _*)
     // keep each colliding (q, c) pair exactly once — at its FIRST
     // colliding (table, probe) in (t asc, j asc) order: every earlier
     // table's BOTH probes must miss. Within one table no extra guard
@@ -735,15 +753,19 @@ object Similarity {
         .otherwise(lit(true))
     }.reduce(_ && _)
     // derived build partitioning (see [[shjBuildParts]]): ys is
-    // nRows x nTables slim rows (~100 B each) — 2^20 rows/partition
-    // keeps each build map ~100 MB at ANY corpus size
-    val ysP = shjBuildParts(spark, nRows * nTables, 1L << 20)
+    // nRows x nTables rows, ~100 B slim or ~700 B carrying the 64-double
+    // vector — 2^20 / 2^17 rows per partition keeps each build map
+    // ~100 MB at ANY corpus size
+    val ysP = shjBuildParts(spark, nRows * nTables, if (withCos) 1L << 17 else 1L << 20)
       .fold(ys)(p => ys.repartition(p, col("yt"), col("bucket")))
-    xs.join(ysP.hint("shuffle_hash"),
+    val pairs = xs.join(ysP.hint("shuffle_hash"),
         col("t") === col("yt") && col("pb") === col("bucket") &&
         col("q_id") =!= col("c_id"))
       .filter(earlierTablesMiss)
-      .select(col("q_id"), col("c_id"))
+    if (withCos)
+      pairs.select(col("q_id"), col("c_id"),
+        (dot("qv", "cv") / (col("qnrm") * col("cnrm"))).as("cos"))
+    else pairs.select(col("q_id"), col("c_id"))
   }
 
   /** DuckDB replica of [[srpProbePairs]]' bucket/flip derivation: the
@@ -833,19 +855,13 @@ object Similarity {
 
   val annSrp = Q(
     "q_ann_srp",
-    (spark, dir) => {
-      val e = emb(spark, dir).select(col("vec_id"), col("vd"), col("nrm"))
-      val cand = srpProbePairs(spark, dir)
-      // rerank: exact cosine per candidate, then per-query packed argmax
+    (spark, dir) =>
+      // rerank: exact cosine per candidate, scored inside the probe
+      // join, then per-query packed argmax
       top1Packed(
-        cand
-          .join(e.select(col("vec_id").as("q_id"), col("vd").as("qv"),
-                         col("nrm").as("qnrm")), "q_id")
-          .join(e.select(col("vec_id").as("c_id"), col("vd").as("cv"),
-                         col("nrm").as("cnrm")), "c_id")
-          .withColumn("sim", round(dot("qv", "cv") / (col("qnrm") * col("cnrm")), 6)),
-        "q_id", "c_id")
-    },
+        srpProbePairs(spark, dir, withCos = true)
+          .withColumn("sim", round(col("cos"), 6)),
+        "q_id", "c_id"),
     Some(s"""
       WITH $srpBkCtesSql,
       cand AS (
@@ -2764,17 +2780,9 @@ object Similarity {
     "q_mmr_rerank_ann",
     (spark, dir) => {
       val e = emb(spark, dir)
-      val queries = e.filter(isKnnQuery)
-        .select(col("vec_id").as("q_id"), col("vd").as("qv"),
-                col("nrm").as("qnrm"))
       val topk = udaf(new graft.functions.Aggregators.TopK(8))
-      val pairs = srpProbePairs(spark, dir, Some(isKnnQuery))
-      val cand0 = pairs
-        .join(queries, "q_id")
-        .join(e.select(col("vec_id").as("c_id"), col("vd").as("cv0"),
-                       col("nrm").as("cn0")), "c_id")
-        .withColumn("rel_ppm", graft.model.Money.cents(
-          dot("cv0", "qv") / (col("cn0") * col("qnrm")), 1000000.0))
+      val cand0 = srpProbePairs(spark, dir, Some(isKnnQuery), withCos = true)
+        .withColumn("rel_ppm", graft.model.Money.cents(col("cos"), 1000000.0))
         .groupBy(col("q_id"))
         .agg(topk(col("rel_ppm"), col("c_id")).as("top"))
         .select(col("q_id"), explode(col("top.items")).as("it"))
@@ -3033,15 +3041,9 @@ object Similarity {
     * the bounded TopK heap, kept only when BOTH endpoints rank each
     * other. */
   private def mutualKnnEdges(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir).select(col("vec_id"), col("vd"), col("nrm"))
     val topk = udaf(new graft.functions.Aggregators.TopK(4))
-    val nn = srpProbePairs(spark, dir)
-      .join(e.select(col("vec_id").as("q_id"), col("vd").as("qv"),
-                     col("nrm").as("qn")), "q_id")
-      .join(e.select(col("vec_id").as("c_id"), col("vd").as("cv"),
-                     col("nrm").as("cn")), "c_id")
-      .withColumn("sim_ppm", graft.model.Money.cents(
-        dot("qv", "cv") / (col("qn") * col("cn")), 1000000.0))
+    val nn = srpProbePairs(spark, dir, withCos = true)
+      .withColumn("sim_ppm", graft.model.Money.cents(col("cos"), 1000000.0))
       .groupBy(col("q_id"))
       .agg(topk(col("sim_ppm"), col("c_id")).as("top"))
       .select(col("q_id").as("a"), explode(col("top.items")).as("it"))
