@@ -34,7 +34,7 @@ object CatalogRoundTrip {
 
   private def session(base: String): SparkSession =
     SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+      .master(s"local[${Session.defaultCpus}]")
       .appName("graft-catalog-roundtrip")
       .config("spark.sql.warehouse.dir", s"$base/warehouse")
       .config("javax.jdo.option.ConnectionURL",

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Session {
 
   /** `SPARK_GRAFT_CPUS`, else the machine's core count. */
-  private def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+  private[graft] def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The corpus Bench and Inspect read: `SPARK_GRAFT_SF_DIR`. */

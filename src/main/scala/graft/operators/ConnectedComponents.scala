@@ -97,6 +97,30 @@ object ConnectedComponents {
       }
     }
 
+  /** The RDDs one call has persisted. If the body of
+    * `releasingOnFailure` throws, every RDD still tracked is unpersisted
+    * best-effort (release errors added as suppressed) and the error is
+    * rethrown; on success whatever is still tracked stays pinned. */
+  private final class Pins {
+    private val pinned = scala.collection.mutable.Set.empty[RDD[_]]
+    def pin[T](r: RDD[T]): RDD[T] = {
+      r.persist(StorageLevel.MEMORY_AND_DISK); pinned += r; r
+    }
+    def track(r: RDD[_]): Unit = { pinned += r; () }
+    def release(r: RDD[_]): Unit = {
+      r.unpersist(blocking = true); pinned -= r; ()
+    }
+    def releasingOnFailure[A](body: => A): A =
+      try body catch {
+        case t: Throwable =>
+          pinned.toSeq.foreach { r =>
+            try r.unpersist(blocking = false)
+            catch { case scala.util.control.NonFatal(e) => t.addSuppressed(e) }
+          }
+          throw t
+      }
+  }
+
   /** Key-partitioned distinct: one shuffle into `part`, then a
     * partition-local seen-set (bounded by distinct pairs per
     * partition). Replaces RDD.distinct, whose trailing map DROPS the
@@ -130,13 +154,8 @@ object ConnectedComponents {
     require(rowsPerPartition > 0, s"rowsPerPartition must be positive, got $rowsPerPartition")
     val confPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
-    val pinned = scala.collection.mutable.Set.empty[RDD[_]]
-    def pin[T](r: RDD[T]): RDD[T] = {
-      r.persist(StorageLevel.MEMORY_AND_DISK); pinned += r; r
-    }
-    def release(r: RDD[_]): Unit = {
-      r.unpersist(blocking = true); pinned -= r; ()
-    }
+    val pins = new Pins
+    import pins.{pin, release}
 
     val input = edges.select(col(src).cast("long"), col(dst).cast("long")).rdd
     // initial partitioner: the conf knob floored by the INPUT's own
@@ -167,7 +186,7 @@ object ConnectedComponents {
       }
       .partitionBy(part0))
 
-    try {
+    pins.releasingOnFailure {
       // init labels(id) = id with ZERO extra shuffles: sym0 carries
       // `part0`, so the dedup reduceByKey is partition-local, and the
       // identity relabel preserves the partitioner. The count() below
@@ -243,7 +262,7 @@ object ConnectedComponents {
         release(labelsStore)
         val canon = sym.filter { case (a, b) => a > b } // each edge once, self-loops out
         val (stars, _) = starContract(canon, part)
-        pinned += stars // starContract returns it persisted; cover it here
+        pins.track(stars) // starContract returns it persisted; cover it here
         // star edges label every attached node; (id, id) seeds cover
         // roots and self-loop-only nodes; min-combine resolves both
         labels = pin(stars.flatMap { case (u, m) => Iterator((u, m), (m, m)) }
@@ -255,20 +274,12 @@ object ConnectedComponents {
       }
       release(sym)
 
+      // the RESULT labels stay pinned on success (the DataFrame reads
+      // them); on failure nothing survives this call
       val out = labels.map { case (id, lbl) => Row(id, lbl) }
       spark.createDataFrame(out, StructType(Seq(
         StructField("id", LongType, nullable = false),
         StructField("lbl", LongType, nullable = false))))
-    } catch {
-      case t: Throwable =>
-        // the RESULT labels stay pinned on success (the DataFrame
-        // reads them); on failure nothing survives this call — release
-        // every block it pinned, best-effort, original error first
-        pinned.toSeq.foreach { r =>
-          try r.unpersist(blocking = false)
-          catch { case scala.util.control.NonFatal(e) => t.addSuppressed(e) }
-        }
-        throw t
     }
   }
 
@@ -303,18 +314,13 @@ object ConnectedComponents {
                                   part: HashPartitioner,
                                   maxRounds: Int = 50): (RDD[(Long, Long)], Int) = {
     val min2 = (a: Long, b: Long) => math.min(a, b)
-    val pinned = scala.collection.mutable.Set.empty[RDD[_]]
-    def pin[T](r: RDD[T]): RDD[T] = {
-      r.persist(StorageLevel.MEMORY_AND_DISK); pinned += r; r
-    }
-    def release(r: RDD[_]): Unit = {
-      r.unpersist(blocking = true); pinned -= r; ()
-    }
-    var edges = pin(edges0.partitionBy(part))
-    edges.count()
-    var rounds = 0
-    var converged = false
-    try {
+    val pins = new Pins
+    import pins.{pin, release}
+    pins.releasingOnFailure {
+      var edges = pin(edges0.partitionBy(part))
+      edges.count()
+      var rounds = 0
+      var converged = false
       while (!converged && rounds < maxRounds) {
         // -------- large-star over the symmetrized adjacency
         // `directed` feeds TWO consumers (the min-reduce and the
@@ -363,13 +369,6 @@ object ConnectedComponents {
           "O(log^2 n) bound violated; the edge list is likely corrupt")
       }
       (edges, rounds)
-    } catch {
-      case t: Throwable =>
-        pinned.toSeq.foreach { r =>
-          try r.unpersist(blocking = false)
-          catch { case scala.util.control.NonFatal(e) => t.addSuppressed(e) }
-        }
-        throw t
     }
   }
 }

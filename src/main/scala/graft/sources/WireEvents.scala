@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -44,14 +44,15 @@ import graft.model.{Money, Q, Tables}
   *  - `SupportsPushDownFilters`: `EqualTo`/`In`/`IsNotNull` on
   *    `event_type` prune partition directories at PLANNING time; `ts`
   *    range predicates prune whole FILES via per-file min/max ts stats
-  *    read from the write-time manifest ([[WireEvents.writeTsStats]];
-  *    sorted-file first/last-line probe as the fallback for files the
-  *    manifest does not cover), pushed for pruning and kept residual
-  *    for exact row evaluation; all other predicates are returned to
-  *    Spark as residuals (evaluated post-scan as usual). A 100 TB wire
-  *    dump filtered to one event type and a time window reads only
-  *    that type's bytes within the window's band of files — and the
-  *    PLANNING of that read opens one manifest, not the band's files.
+  *    read from each surviving dir's write-time sidecar
+  *    ([[WireEvents.writeTsStats]]; sorted-file first/last-line probe
+  *    as the fallback for files no sidecar covers), pushed for pruning
+  *    and kept residual for exact row evaluation; all other predicates
+  *    are returned to Spark as residuals (evaluated post-scan as
+  *    usual). A 100 TB wire dump filtered to one event type and a time
+  *    window reads only that type's bytes within the window's band of
+  *    files — and the PLANNING of that read opens that type's sidecar,
+  *    not the band's files.
   *  - `SupportsPushDownRequiredColumns`: the reader materializes ONLY
   *    the requested fields from each JSON node — a 2-column projection
   *    never allocates the other four (the JSON line is still read;
@@ -819,9 +820,9 @@ object WireEvents {
     * lexicographically ordered, so string compare == time compare.
     * Since r12 this probe runs (a) cluster-parallel inside the
     * write-time stats job ([[writeTsStats]]) and (b) on the driver
-    * only as the per-file FALLBACK for files the manifest does not
-    * cover — planning under a ts range reads the manifest, not the
-    * candidate files. A line longer than the window yields None
+    * only as the per-file FALLBACK for files no sidecar covers —
+    * planning under a ts range reads the sidecars, not the candidate
+    * files. A line longer than the window yields None
     * (unknown), never a wrong bound. */
   private[sources] def fileTsRange(
       fs: FileSystem, p: HPath, len: Long): (Option[String], Option[String]) = {
@@ -854,22 +855,13 @@ object WireEvents {
     } finally in.close()
   }
 
-  /** Name of the LEGACY root-level ts-stats manifest (underscore
-    * prefix = invisible to data-file listing, the same convention as
-    * `_SUCCESS`). READ-ONLY since end-of-r13: [[writeTsStats]]
-    * publishes only the per-dir [[TsStatsSidecar]] files (the root
-    * rewrite was the last O(total-files) serialization on the commit
-    * path); planning reads surviving dirs' sidecars and consults this
-    * file lazily only for layouts written before sidecars existed. */
-  private[sources] val TsStatsFile = "_wire_ts_stats.json"
-
   /** Per-partition-dir ts-stats sidecar (`event_type=X/_ts_stats.json`,
-    * entries keyed by bare file name). Sharding is the r12 verdict's
-    * task 2: one root manifest is O(total files) and every ts-banded
-    * plan parsed ALL of it on the driver — at 100 TB (millions of
-    * files over tens of types) a `type ∧ ts` plan should parse only
-    * the surviving dirs' entries, and the commit path should rewrite
-    * only the dirs it touched, not one global file. */
+    * entries keyed by bare file name; the underscore prefix keeps it
+    * out of the data-file listing, like `_SUCCESS`). The ONE ts-stats
+    * store: one per dir, not one for the layout, so at 100 TB
+    * (millions of files over tens of types) a `type ∧ ts` plan parses
+    * only the surviving dirs' entries, and the commit path rewrites
+    * only the dirs it touched, never one O(total files) global file. */
   private[sources] val TsStatsSidecar = "_ts_stats.json"
 
   /** Driver-side memo of fallback probe results keyed (path, length):
@@ -913,9 +905,9 @@ object WireEvents {
     else { val v = f; probeCache.put(key, v); v }
   }
 
-  /** Read ONE stats file (root manifest or per-dir sidecar): entry
-    * key -> (file length, min ts, max ts); None when the file is
-    * absent (callers pick their fallback). A malformed file fails
+  /** Read ONE per-dir sidecar: file name -> (file length, min ts,
+    * max ts); None when the sidecar is absent (the caller falls back
+    * to the per-file probe). A malformed sidecar fails
     * LOUDLY — silently ignoring it would put planning back on the
     * O(files) probe path with no signal. */
   private[sources] def readStatsFile(fs: FileSystem, p: HPath)
@@ -942,42 +934,11 @@ object WireEvents {
     }.toMap)
   }
 
-  /** The ROOT manifest, keyed by dir-relative path
-    * (`event_type=X/part-...`). MIGRATION-ONLY legacy (r13 verdict
-    * task 4 — the write path died end-of-r13, and a fallback that
-    * lives forever rots): [[listWireFiles]] consults it exactly once
-    * per pre-sidecar dir, to mint that dir's sidecar on first ranged
-    * read; every later plan is sidecar-only (spec-pinned by the
-    * counting-FS legacy test's second read). */
-  private[sources] def readTsStats(
-      fs: FileSystem, root: HPath): Map[String, (Long, Option[String], Option[String])] =
-    readStatsFile(fs, new HPath(root, TsStatsFile)).getOrElse(Map.empty)
-
-  /** Sidecar paths whose legacy migration failed once this JVM —
-    * consulted so a read-only pre-sidecar layout pays the doomed
-    * create + stderr line ONCE per dir, not once per ranged plan
-    * (review finding). Bounded by the layout's dir count (one string
-    * per event_type dir), so no eviction needed. */
-  private val migrationFailed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** One ts-stats sidecar COMMIT — entries (fileName, len, min, max)
     * sorted by name, temp-then-rename so a reader never sees a torn
-    * file. The one spelling shared by the write-time stats job and
-    * the legacy-manifest migration.
-    *
-    * `overwrite = false` (the MIGRATION mode) yields to any sidecar
-    * that appeared since the caller looked: a migrating READER racing
-    * a WRITER's writeTsStats must never replace the writer's fresh
-    * entries with its stale root-manifest copy (review finding — the
-    * unconditional delete-then-rename did exactly that; and POSIX
-    * rename onto an existing target succeeds by overwriting, so
-    * "the rename will refuse" was never a safe assumption). The
-    * residual exists→rename window is microseconds, and losing it
-    * costs only conservative re-probes, never wrong pruning. */
+    * file; the commit replaces whatever sidecar was there. */
   private[graft] def commitStatsFile(fs: FileSystem, target: HPath,
-      entries: Seq[(String, Long, Option[String], Option[String])],
-      overwrite: Boolean = true): Unit = {
+      entries: Seq[(String, Long, Option[String], Option[String])]): Unit = {
     val mapper = new ObjectMapper()
     val lines = entries.sortBy(_._1).map { case (name, len, mn, mx) =>
       val n = mapper.createObjectNode()
@@ -992,8 +953,7 @@ object WireEvents {
     val out = fs.create(tmp, true)
     try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
-    if (overwrite) fs.delete(target, false)
-    else if (fs.exists(target)) { fs.delete(tmp, false); return }
+    fs.delete(target, false)
     if (!fs.rename(tmp, target)) {
       fs.delete(tmp, false)
       throw new IllegalStateException(
@@ -1005,9 +965,8 @@ object WireEvents {
     * file under `dir`, computed as a DISTRIBUTED job (one task per
     * bounded first/last-line probe — executors pay the two 64 KB reads
     * each, in parallel) and published as PER-DIR SIDECARS
-    * (`event_type=X/_ts_stats.json`, r12 verdict task 2) — the ONLY
-    * store written; the legacy root manifest is read-only fallback
-    * for pre-sidecar layouts. At 100 TB this is the difference between a ts-windowed
+    * (`event_type=X/_ts_stats.json`, r12 verdict task 2). At 100 TB
+    * this is the difference between a ts-windowed
     * query's PLANNING opening O(candidate-files) streams on the driver
     * (r11 behavior) — or, r12's shape, parsing one O(total-files) root
     * file — and parsing only the SURVIVING dirs' O(dir-files) entries:
@@ -1028,17 +987,10 @@ object WireEvents {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new HPath(dir)
     val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return
-    val files: Seq[(String, String, Long)] = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_type="))
-      .flatMap { d =>
-        fs.listStatus(d.getPath).toSeq
-          .filter(s => s.isFile && {
-            val n = s.getPath.getName
-            !n.startsWith("_") && !n.startsWith(".")
-          })
-          .map(s => (d.getPath.getName + "/" + s.getPath.getName,
-                     s.getPath.toString, s.getLen))
+    val files: Seq[(String, String, Long)] = listDataFiles(fs, root, _ => true)
+      .flatMap { case (dirName, statuses) =>
+        statuses.map(s => (dirName + "/" + s.getPath.getName,
+                           s.getPath.toString, s.getLen))
       }
     if (files.isEmpty) return
     def dirOf(rel: String) = rel.substring(0, rel.indexOf('/'))
@@ -1104,13 +1056,26 @@ object WireEvents {
             })
         }
       }
-    // the root manifest is READ-ONLY legacy from here on: it was the
-    // one remaining O(total-files) serialization on this commit path
-    // (rewritten whole on every append), and nothing writes it since
-    // the per-dir sidecars soaked a full round as the primary store.
-    // [[listWireFiles]] keeps the lazy read fallback for pre-sidecar
-    // layouts.
   }
+
+  /** The layout's data files grouped by `event_type=` dir name, both in
+    * listing order; empty when `root` does not exist. A data file is a
+    * plain file without a `_`/`.` prefix, so sidecars, `_SUCCESS` and
+    * commit temps never list. `keepDir` prunes a dir by name before its
+    * files are listed. The one listing shared by the stats job and the
+    * planning census. */
+  private def listDataFiles(fs: FileSystem, root: HPath,
+      keepDir: String => Boolean): Seq[(String, Seq[FileStatus])] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_type=") &&
+        keepDir(s.getPath.getName))
+      .map { d =>
+        d.getPath.getName -> fs.listStatus(d.getPath).toSeq.filter(s => s.isFile && {
+          val n = s.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".")
+        })
+      }
 
   /** Driver-side census of the wire layout with directory pruning
     * applied: (partition value, file path, length) for every data file
@@ -1124,123 +1089,54 @@ object WireEvents {
     * qualify a range predicate under SQL nulls, so their presence in a
     * pruned file is sound to skip).
     *
-    * Stats come from the write-time manifest ([[writeTsStats]]) when
-    * present and length-fresh, so PLANNING under a ts range opens
-    * exactly ONE small file — never the candidate data files (the r11
-    * audit's O(candidate-files) driver-I/O seam, closed r12; pinned by
-    * WireSourceSpec's counting-filesystem test). Files a foreign writer
-    * dropped in after the manifest was written (no entry / stale
-    * length) fall back to the direct per-file probe ([[fileTsRange]]) —
-    * the conservative path, paid only for the unknown files. */
+    * Stats come from each surviving dir's sidecar ([[writeTsStats]])
+    * when present and length-fresh, so PLANNING under a ts range opens
+    * one small file per surviving dir — never the candidate data files
+    * (the r11 audit's O(candidate-files) driver-I/O seam, closed r12;
+    * pinned by WireSourceSpec's counting-filesystem test). A dir with
+    * no sidecar, and files a foreign writer dropped in after the
+    * sidecar was written (no entry / stale length), fall back to the
+    * direct per-file probe ([[fileTsRange]]) — the conservative path,
+    * paid only for the unknown files. */
   private[sources] def listWireFiles(
       path: String, pushed: Array[Filter]): Seq[(String, String, Long)] = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val root = new HPath(path)
     val fs = root.getFileSystem(conf)
-    // (value, abs path, length, root-relative path)
-    val listed =
-      if (!fs.exists(root)) Seq.empty[(String, String, Long, String)]
-      else fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_type="))
-        .map { d =>
-          val raw = d.getPath.getName.stripPrefix("event_type=")
-          val v = if (raw == "__HIVE_DEFAULT_PARTITION__") null
-                  else unescapePathName(raw)
-          (v, d.getPath)
-        }
-        .filter { case (v, _) => survives(v, pushed) }
-        .flatMap { case (v, dir) =>
-          fs.listStatus(dir).toSeq
-            .filter(s => s.isFile && {
-              val n = s.getPath.getName
-              !n.startsWith("_") && !n.startsWith(".")
-            })
-            .map(s => (v, s.getPath.toString, s.getLen,
-                       dir.getName + "/" + s.getPath.getName))
-        }
+    def valueOf(dirName: String): String = {
+      val raw = dirName.stripPrefix("event_type=")
+      if (raw == "__HIVE_DEFAULT_PARTITION__") null else unescapePathName(raw)
+    }
+    val dirs = listDataFiles(fs, root, dn => survives(valueOf(dn), pushed))
+    def rows(dirName: String, files: Seq[FileStatus]) = {
+      val v = valueOf(dirName)
+      files.map(s => (v, s.getPath.toString, s.getLen))
+    }
     val (lo, hi) = tsBounds(pushed)
     val inSet = tsInSet(pushed)
     if (lo.isEmpty && hi.isEmpty && inSet.isEmpty)
-      listed.map { case (v, p, len, _) => (v, p, len) }
-    else {
-      // stats come from each SURVIVING dir's own sidecar — a `type ∧
-      // ts` plan parses only those dirs' entries, never one
-      // O(total-files) root manifest (r12 verdict task 2). A dir with
-      // NO sidecar MIGRATES on first read (r13 verdict task 4 — the
-      // root manifest's explicit end-of-life): its legacy root-manifest
-      // entries are committed as the dir's own sidecar right here, so
-      // the root file is parsed at most once per pre-sidecar dir and
-      // every later plan on the layout is sidecar-only. The commit is
-      // best-effort — on a read-only filesystem the minted entries
-      // still serve THIS plan from memory and migration retries next
-      // read. A sidecar, once present, is authoritative for its dir —
-      // an uncovered/stale entry there goes straight to the per-file
-      // probe.
-      // ONE pass over the root manifest, grouped by dir (a per-dir
-      // startsWith scan was O(dirs × entries) per plan on a layout
-      // that never migrates — review finding)
-      lazy val legacyByDir: Map[String, Map[String, (Long, Option[String], Option[String])]] =
-        readTsStats(fs, root).toSeq
-          // a root entry without a dir prefix can never address a
-          // partition file — drop it rather than letting substring
-          // throw on a hand-edited manifest line
-          .filter { case (rel, _) => rel.indexOf('/') > 0 }
-          .groupBy { case (rel, _) => rel.substring(0, rel.indexOf('/')) }
-          .map { case (dn, es) =>
-            dn -> es.map { case (rel, v) =>
-              rel.substring(rel.indexOf('/') + 1) -> v }.toMap
-          }
-      listed.groupBy { case (_, _, _, rel) => rel.substring(0, rel.indexOf('/')) }
-        .toSeq.sortBy(_._1)
-        .flatMap { case (dirName, group) =>
-          val sidecarPath = new HPath(new HPath(root, dirName), TsStatsSidecar)
-          val sidecar = readStatsFile(fs, sidecarPath).orElse {
-            val legacy = legacyByDir.getOrElse(dirName, Map.empty)
-            if (legacy.isEmpty) None
-            else {
-              // NonFatal, not just IOException: any commit failure must
-              // leave this plan serving from the in-memory entries,
-              // never kill the read (review finding). A dir whose
-              // migration failed once (read-only layout) is remembered
-              // and not re-attempted — a long-lived streaming reader
-              // must not pay a doomed create + a stderr line per dir
-              // per trigger (second review batch).
-              if (!migrationFailed.contains(sidecarPath.toString)) {
-                try commitStatsFile(fs, sidecarPath,
-                  legacy.toSeq.map { case (n, (len, mn, mx)) => (n, len, mn, mx) },
-                  overwrite = false)
-                catch {
-                  case scala.util.control.NonFatal(e) =>
-                    migrationFailed.add(sidecarPath.toString): Unit
-                    System.err.println(s"[wire-events] could not migrate legacy " +
-                      s"ts-stats to $sidecarPath (read-only layout?): " +
-                      s"${e.getMessage} — serving this plan from the root " +
-                      "manifest; will not re-attempt this JVM")
-                }
-              }
-              Some(legacy)
-            }
-          }
-          group.filter { case (_, p, len, rel) =>
-            val name = rel.substring(rel.indexOf('/') + 1)
-            def probe = probeMemo((p, len))(
-              fileTsRange(fs, new HPath(p), len))
-            val (mn, mx) = sidecar match {
-              case Some(entries) => entries.get(name) match {
-                case Some((mLen, mMin, mMax)) if mLen == len => (mMin, mMax)
-                case _ => probe
-              }
-              case None => probe
-            }
-            val entirelyAbove = hi.exists(h => mn.exists(_ > h))
-            val entirelyBelow = lo.exists(l => mx.exists(_ < l))
-            // DPP key set: the file must hold SOME key in its band
-            // (unknown min/max stay conservative — treated unbounded)
-            val missesKeys = inSet.exists(ks => !ks.exists(k =>
-              mn.forall(_ <= k) && mx.forall(_ >= k)))
-            !(entirelyAbove || entirelyBelow || missesKeys)
-          }
-        }.map { case (v, p, len, _) => (v, p, len) }
+      dirs.flatMap { case (dirName, files) => rows(dirName, files) }
+    else dirs.sortBy(_._1).flatMap { case (dirName, files) =>
+      // a sidecar is authoritative for its dir: an uncovered/stale
+      // entry there, or no sidecar at all, goes to the per-file probe.
+      // Lazy: a dir with no data files never opens its sidecar.
+      lazy val sidecar =
+        readStatsFile(fs, new HPath(new HPath(root, dirName), TsStatsSidecar))
+      rows(dirName, files.filter { s =>
+        val (p, len) = (s.getPath.toString, s.getLen)
+        def probe = probeMemo((p, len))(fileTsRange(fs, s.getPath, len))
+        val (mn, mx) = sidecar.flatMap(_.get(s.getPath.getName)) match {
+          case Some((mLen, mMin, mMax)) if mLen == len => (mMin, mMax)
+          case _ => probe
+        }
+        val entirelyAbove = hi.exists(h => mn.exists(_ > h))
+        val entirelyBelow = lo.exists(l => mx.exists(_ < l))
+        // DPP key set: the file must hold SOME key in its band
+        // (unknown min/max stay conservative — treated unbounded)
+        val missesKeys = inSet.exists(ks => !ks.exists(k =>
+          mn.forall(_ <= k) && mx.forall(_ >= k)))
+        !(entirelyAbove || entirelyBelow || missesKeys)
+      })
     }
   }
 

@@ -647,8 +647,7 @@ class WireSourceSpec extends SparkSpec {
     // per-dir sidecars. This test pins the r13 bound via a counting
     // filesystem: a ts-ranged plan may open surviving dirs' sidecars
     // and nothing else; a `type ∧ ts` plan opens ONLY the surviving
-    // type's sidecar — not other dirs', not the root fallback, and
-    // never a data file.
+    // type's sidecar — not other dirs', and never a data file.
     spark.sparkContext.hadoopConfiguration
       .set("fs.cntfs.impl", classOf[CountingLocalFs].getName)
     val cut = events.selectExpr(
@@ -666,9 +665,6 @@ class WireSourceSpec extends SparkSpec {
       s"ts-range planning must not open data files; opened: ${dataOpensOf(openedAtPlanning)}")
     assert(openedAtPlanning.count(_.endsWith("/_ts_stats.json")) >= 1,
       s"planning should read the per-dir sidecars; opened: $openedAtPlanning")
-    assert(!openedAtPlanning.exists(_.endsWith("/_wire_ts_stats.json")),
-      "with sidecars present the O(total-files) root manifest must stay " +
-        s"unread; opened: $openedAtPlanning")
     // type ∧ ts: only the surviving dir's sidecar is parsed
     CountingLocalFs.opened.clear()
     val typed = WireEvents.read(spark, "cntfs:" + wireDir)
@@ -680,8 +676,7 @@ class WireSourceSpec extends SparkSpec {
       sidecarOpens.forall(_.contains("/event_type=click/")),
       s"a type ∧ ts plan must parse only the surviving dir's sidecar; " +
         s"opened: $typedOpens")
-    assert(dataOpensOf(typedOpens).isEmpty &&
-      !typedOpens.exists(_.endsWith("/_wire_ts_stats.json")),
+    assert(dataOpensOf(typedOpens).isEmpty,
       s"type ∧ ts planning opened beyond the one sidecar: $typedOpens")
     // the sidecar-backed pruning still prunes, and rows stay exact
 
@@ -712,7 +707,7 @@ class WireSourceSpec extends SparkSpec {
       "manifest-missing files must be probed, not mis-pruned")
   }
 
-  test("a corrupt ts-stats sidecar or root manifest fails loudly, never silently degrades to the probe path") {
+  test("a corrupt ts-stats sidecar fails loudly, never silently degrades to the probe path") {
     val d = tmp()
     WireEvents.writeWire(events.filter(col("event_id") < 200), d)
     val cut = events.selectExpr(
@@ -733,16 +728,6 @@ class WireSourceSpec extends SparkSpec {
     val clickDir = Paths.get(d, "event_type=click")
     Files.writeString(clickDir.resolve("_ts_stats.json"), "{not json\n")
     Files.deleteIfExists(clickDir.resolve("._ts_stats.json.crc"))
-    assert(loudMsgs(planRanged()).contains("malformed ts-stats manifest"))
-    // root fallback (pre-sidecar layout): delete every sidecar, corrupt
-    // the root — same loud contract on the fallback path
-    Files.list(Paths.get(d)).filter(_.getFileName.toString.startsWith("event_type="))
-      .forEach { dir =>
-        Files.deleteIfExists(dir.resolve("_ts_stats.json"))
-        Files.deleteIfExists(dir.resolve("._ts_stats.json.crc"))
-      }
-    Files.writeString(Paths.get(d, "_wire_ts_stats.json"), "{not json\n")
-    Files.deleteIfExists(Paths.get(d, "._wire_ts_stats.json.crc"))
     assert(loudMsgs(planRanged()).contains("malformed ts-stats manifest"))
     // without a ts predicate no stats file is ever read: scan unaffected
     assert(WireEvents.read(spark, d).count() ===
@@ -788,42 +773,30 @@ class WireSourceSpec extends SparkSpec {
         .selectExpr("get_json_object(value, '$.ts') AS ts")
         .filter(col("ts") >= cut).count()
     assert(WireEvents.read(spark, d).filter(col("ts") >= cut).count() === expected)
-    // the root manifest is never written anymore (end-of-r13: the
-    // root rewrite was the last O(total-files) serialization on the
-    // commit path; it survives only as a read fallback for layouts
-    // written before sidecars existed)
+    // the retired r12 root manifest is never written (its rewrite was
+    // the last O(total-files) serialization on the commit path)
     assert(!Files.exists(Paths.get(d, "_wire_ts_stats.json")),
-      "the stats commit path must not write the legacy root manifest")
+      "the stats commit path must not write a root manifest")
   }
 
-  test("a pre-sidecar layout (root manifest only) still prunes through the read fallback") {
-    // layouts written before sidecars existed carry one root-level
-    // manifest with dir-prefixed paths; the writer no longer produces
-    // them, but the read path must keep pruning from one — without
-    // opening data files at planning — until such layouts age out
+  test("a layout with no sidecars prunes through the per-file probe") {
+    // a sidecar is the only stats store: a dir without one (a layout
+    // copied without its underscore files, a lost commit) must still
+    // prune, from the conservative first/last-line probe of each file
     val d = tmp()
     WireEvents.writeWire(events.filter(col("event_id") < 200), d)
-    import scala.jdk.CollectionConverters._
-    // synthesize the legacy shape from the sidecars, then remove them
-    val rootLines = Files.list(Paths.get(d)).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("event_type="))
-      .flatMap { dir =>
-        val side = dir.resolve("_ts_stats.json")
-        Files.readAllLines(side).asScala.filter(_.nonEmpty).map(
-          _.replaceFirst("\"path\":\"", s""""path":"${dir.getFileName}/"""))
-      }.toSeq.sorted
-    Files.writeString(Paths.get(d, "_wire_ts_stats.json"),
-      rootLines.mkString("", "\n", "\n"))
-    Files.list(Paths.get(d)).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("event_type="))
-      .foreach { dir =>
-        Files.deleteIfExists(dir.resolve("_ts_stats.json"))
-        Files.deleteIfExists(dir.resolve("._ts_stats.json.crc"))
-      }
+    def sidecars(): Seq[java.io.File] = new java.io.File(d).listFiles()
+      .filter(_.getName.startsWith("event_type="))
+      .map(new java.io.File(_, "_ts_stats.json")).filter(_.exists).toSeq
+    assert(sidecars().nonEmpty, "writeWire must have written sidecars")
+    sidecars().foreach { f =>
+      Files.delete(f.toPath)
+      Files.deleteIfExists(f.toPath.resolveSibling("._ts_stats.json.crc"))
+    }
     // the cut must come from the WRITTEN SUBSET's distribution: the
     // global median sits above every subset ts, which would prune ALL
     // files and make both assertions below vacuous (0 < N and 0 === 0
-    // pass even with the fallback broken — review finding)
+    // pass even with pruning broken — review finding)
     val written = events.filter(col("event_id") < 200)
     val cut = written.selectExpr(
       s"date_format(percentile_approx(ts, 0.5), '${WireEvents.TsFmt}')")
@@ -831,49 +804,15 @@ class WireSourceSpec extends SparkSpec {
     val expected = written
       .filter(date_format(col("ts"), WireEvents.TsFmt) >= cut).count()
     assert(expected > 0, "the cut must keep some rows or the test is vacuous")
-    // route through the counting FS: the fallback must prune from the
-    // ROOT MANIFEST at planning, never by opening data files
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.cntfs.impl", classOf[CountingLocalFs].getName)
-    CountingLocalFs.opened.clear()
-    val ranged = WireEvents.read(spark, "cntfs:" + d).filter(col("ts") >= cut)
+    val ranged = WireEvents.read(spark, d).filter(col("ts") >= cut)
     val rangedPlan = ranged.queryExecution.executedPlan.toString
-    val opens = {
-      import scala.jdk.CollectionConverters._
-      CountingLocalFs.opened.asScala.toList
-    }
-    assert(opens.exists(_.endsWith("/_wire_ts_stats.json")),
-      s"planning must read the legacy root manifest; opened: $opens")
-    assert(!opens.exists(p => p.contains("/event_type=") &&
-        !p.endsWith("/_ts_stats.json")),
-      s"fallback planning must not open data files; opened: $opens")
-    val all = WireEvents.read(spark, "cntfs:" + d)
+    val all = WireEvents.read(spark, d)
     val (nRanged, nAll) = (filesOf(rangedPlan), filesOf(all))
     assert(nRanged > 0 && nRanged < nAll,
-      s"the root-manifest fallback must prune PARTIALLY ($nRanged of $nAll)")
+      s"the per-file probe must prune PARTIALLY ($nRanged of $nAll)")
     assert(ranged.count() === expected)
-    // MIGRATE-ON-FIRST-READ (r13 verdict task 4 — the fallback's
-    // explicit end-of-life): that first ranged plan must have MINTED
-    // each dir's sidecar from its root-manifest entries…
-    // (File.listFiles, not Files.list: the stream variant holds an
-    // open directory fd until GC unless closed — review finding)
-    new java.io.File(d).listFiles()
-      .filter(_.getName.startsWith("event_type="))
-      .foreach { dir =>
-        assert(Files.exists(dir.toPath.resolve("_ts_stats.json")),
-          s"first ranged read must migrate $dir to a per-dir sidecar")
-      }
-    // …so a SECOND ranged read plans sidecar-only: the root manifest
-    // is never opened again on this layout (the fallback has retired
-    // itself), and the answer is unchanged
-    CountingLocalFs.opened.clear()
-    val ranged2 = WireEvents.read(spark, "cntfs:" + d).filter(col("ts") >= cut)
-    assert(ranged2.count() === expected)
-    val opens2 = CountingLocalFs.opened.asScala.toList
-    assert(opens2.exists(_.endsWith("/_ts_stats.json")),
-      s"post-migration planning must read the minted sidecars; opened: $opens2")
-    assert(!opens2.exists(_.endsWith("/_wire_ts_stats.json")),
-      s"post-migration planning must not reopen the root manifest; opened: $opens2")
+    // reading never writes stats: the layout stays sidecar-less
+    assert(sidecars().isEmpty, s"a ranged read minted sidecars: ${sidecars()}")
   }
 
   test("a crash between append's delta and snapshot writes does not brick the log (walk-back + self-heal)") {
@@ -914,33 +853,23 @@ class WireSourceSpec extends SparkSpec {
     assert(e.getMessage.contains("unrecoverable"), e.getMessage)
   }
 
-  test("a no-overwrite stats commit yields to an existing sidecar (migration loses races, never clobbers)") {
-    // the second review batch's race: a migrating READER must never
-    // replace a WRITER's fresh sidecar with its stale root-manifest
-    // copy — POSIX rename onto an existing target OVERWRITES, so the
-    // yield has to be explicit, not an assumed refused rename
+  test("a stats commit replaces the existing sidecar and leaves no temp file") {
     val d = tmp()
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(d)
     val fs = root.getFileSystem(conf)
     val target = new org.apache.hadoop.fs.Path(root, "_ts_stats.json")
     WireEvents.commitStatsFile(fs, target,
-      Seq(("fresh.txt", 10L, Some("a"), Some("b"))))
-    val fresh = Files.readString(Paths.get(d, "_ts_stats.json"))
-    // a stale no-overwrite commit must leave the fresh content intact…
-    WireEvents.commitStatsFile(fs, target,
-      Seq(("stale.txt", 5L, Some("x"), Some("y"))), overwrite = false)
-    assert(Files.readString(Paths.get(d, "_ts_stats.json")) === fresh,
-      "no-overwrite commit clobbered an existing sidecar")
-    // …and leave no orphaned temp file behind (checksummed LocalFS
-    // also writes .crc shadows, so count .tmp files, not name matches)
-    assert(new java.io.File(d).listFiles().map(_.getName)
-        .count(_.endsWith(".tmp")) === 0,
-      "no-overwrite commit leaked its temp file")
-    // an OVERWRITE commit (the write-time stats job) still replaces
+      Seq(("older.txt", 10L, Some("a"), Some("b"))))
     WireEvents.commitStatsFile(fs, target,
       Seq(("newer.txt", 7L, None, None)))
-    assert(Files.readString(Paths.get(d, "_ts_stats.json")).contains("newer.txt"))
+    val body = Files.readString(Paths.get(d, "_ts_stats.json"))
+    assert(body.contains("newer.txt") && !body.contains("older.txt"), body)
+    // checksummed LocalFS also writes .crc shadows, so count .tmp
+    // files, not name matches
+    assert(new java.io.File(d).listFiles().map(_.getName)
+        .count(_.endsWith(".tmp")) === 0,
+      "the commit leaked its temp file")
   }
 
   test("the probe memo is a bounded LRU: eldest evicts, the hot tail stays memoized") {
@@ -1119,7 +1048,7 @@ class WireSourceSpec extends SparkSpec {
     // the batch counting-FS test pins planning; this pins the STREAM:
     // a type ∧ ts subscription's census (every trigger's listing +
     // admission) must read only the subscribed dir's sidecar — never
-    // the root manifest, other dirs' sidecars, or off-type data files
+    // other dirs' sidecars or off-type data files
     spark.sparkContext.hadoopConfiguration
       .set("fs.cntfs.impl", classOf[CountingLocalFs].getName)
     val d = tmp()
@@ -1144,8 +1073,7 @@ class WireSourceSpec extends SparkSpec {
     assert(total === events.filter(col("event_type") === "click")
       .filter(date_format(col("ts"), WireEvents.TsFmt) >= cut).count())
     val opened = CountingLocalFs.opened.asScala.toList
-    val statsOpens = opened.filter(p =>
-      p.endsWith("/_ts_stats.json") || p.endsWith("/_wire_ts_stats.json"))
+    val statsOpens = opened.filter(_.endsWith("/_ts_stats.json"))
     assert(statsOpens.nonEmpty &&
       statsOpens.forall(_.contains("/event_type=click/")),
       s"stream census must read only the subscribed dir's sidecar: $statsOpens")
@@ -1337,37 +1265,17 @@ class WireSourceSpec extends SparkSpec {
       "post-heal retention must re-bound the log on the next committed run")
   }
 
-  test("kill-and-restart mid-migration: a dir whose sidecar commit was lost re-migrates, band stays exactly-once") {
-    // r16 verdict task 7, second leg: the migrate-on-first-read path
-    // (legacy root-manifest-only layout -> per-dir sidecars, r13) under
-    // a hostile restart. Run 1 migrates on its first ts-banded plan;
-    // the crash loses ONE dir's sidecar commit (deleted here), and a
-    // new in-band file lands in that dir while down — a file neither
-    // the root manifest nor any sidecar covers (direct-probe fallback).
-    // The restart must admit exactly the new file's rows, re-migrate
-    // the lost sidecar from the still-present root manifest, and
-    // re-emit nothing already committed.
-    import scala.jdk.CollectionConverters._
+  test("kill-and-restart with a lost sidecar: the dir falls back to the probe, band stays exactly-once") {
+    // r16 verdict task 7, second leg: the ts-banded stream under a
+    // hostile restart. Run 1 plans from the sidecars; the crash loses
+    // ONE dir's sidecar (deleted here), and a new in-band file lands in
+    // that dir while down — so the dir's every file, old and new, now
+    // has stats from the direct probe only. The restart must admit
+    // exactly the new file's rows and re-emit nothing already
+    // committed.
     val d = tmp()
     val written = events.filter(col("event_id") < 300)
     WireEvents.writeWire(written, d)
-    // legacy shape (the pre-sidecar test's recipe): synthesize the root
-    // manifest from the sidecars, then remove every sidecar
-    val rootLines = Files.list(Paths.get(d)).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("event_type="))
-      .flatMap { dir =>
-        val side = dir.resolve("_ts_stats.json")
-        Files.readAllLines(side).asScala.filter(_.nonEmpty).map(
-          _.replaceFirst("\"path\":\"", s""""path":"${dir.getFileName}/"""))
-      }.toSeq.sorted
-    Files.writeString(Paths.get(d, "_wire_ts_stats.json"),
-      rootLines.mkString("", "\n", "\n"))
-    Files.list(Paths.get(d)).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("event_type="))
-      .foreach { dir =>
-        Files.deleteIfExists(dir.resolve("_ts_stats.json"))
-        Files.deleteIfExists(dir.resolve("._ts_stats.json.crc"))
-      }
     val cut = written.selectExpr(
       s"date_format(percentile_approx(ts, 0.5), '${WireEvents.TsFmt}')")
       .collect()(0).getString(0)
@@ -1389,11 +1297,10 @@ class WireSourceSpec extends SparkSpec {
     }
     run()
     assert(total === inBand, "run 1 must deliver exactly the in-band rows")
+    // the hostile window: the sidecar is lost, and a new in-band file
+    // (covered by NO stats anywhere) lands while the query is down
     val clickSide = Paths.get(d, "event_type=click", "_ts_stats.json")
-    assert(Files.exists(clickSide),
-      "the first banded plan must have migrated the dir's sidecar")
-    // the hostile window: the sidecar commit is lost, and a new in-band
-    // file (covered by NO stats anywhere) lands while the query is down
+    assert(Files.exists(clickSide), "writeWire must have written the sidecar")
     Files.delete(clickSide)
     Files.deleteIfExists(Paths.get(d, "event_type=click", "._ts_stats.json.crc"))
     val maxTs = written.selectExpr(
@@ -1403,7 +1310,5 @@ class WireSourceSpec extends SparkSpec {
     run()
     assert(total === inBand + 1,
       "restart must admit exactly the new in-band file's row — nothing re-emits")
-    assert(Files.exists(clickSide),
-      "the lost sidecar must re-migrate from the root manifest on the next plan")
   }
 }

@@ -24,6 +24,17 @@ def types_compatible(s, d):
     ints = {pa.int32(), pa.int64()}
     return s in ints and d in ints
 
+def duckdb_memory_mb():
+    """Half of MemTotal in MB, 1 GB if /proc/meminfo is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return max(1024, int(line.split()[1]) // 2048)
+    except OSError:
+        pass
+    return 1024
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
@@ -34,9 +45,12 @@ def main():
     # sizing its buffer pool off total RAM and fragmenting the process
     # heap over the long run. A bounded pool + an explicit spill dir
     # make the gate deterministic; results are unaffected (DuckDB
-    # spills, or errors LOUDLY — never silently wrong).
-    con.execute("SET memory_limit='16GB'")
-    con.execute("SET threads=8")
+    # spills, or errors LOUDLY — never silently wrong). The pool is
+    # half the box's RAM (the same rule as the tests' SPARK_DRIVER_MEM)
+    # and one thread per core: a fixed 16 GB/8 threads on a 16 GB,
+    # 4-core box let allocations fail before DuckDB ever spilled.
+    con.execute(f"SET memory_limit='{duckdb_memory_mb()}MB'")
+    con.execute(f"SET threads={os.cpu_count() or 1}")
     import tempfile
     con.execute(f"SET temp_directory='{tempfile.gettempdir()}/duckdb_check_spill'")
     for t in TABLES:
