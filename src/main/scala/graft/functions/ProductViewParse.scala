@@ -10,18 +10,19 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One compiled Jackson STREAMING pass from a ProductView wire line to
-  * the FLAT six-field record the pipeline consumes — the
-  * schema-projected replacement for `from_json(value, productViewSchema)`
-  * + struct-flattening select on the hot path.
+  * the FLAT record the pipeline consumes: the six wire fields plus
+  * `json_ok`. It is the engine's only parser of the wire record, and
+  * replaces Spark's JSON-to-struct reader (`JsonToStructs`) over the
+  * nested record schema + a struct-flattening select.
   *
-  * Why: `from_json` (JsonToStructs) is CodegenFallback — every record
-  * pays interpreted dispatch plus the generic row assembly of the full
+  * Why: `JsonToStructs` is CodegenFallback — every record pays
+  * interpreted dispatch plus the generic row assembly of the full
   * nested schema, then a second projection flattens it. Measured at
-  * sf0.1 the from_json leg alone cost ~0.8 s per pass, paid by every
+  * sf0.1 the JsonToStructs leg alone cost ~0.8 s per pass, paid by every
   * batch-parity pipeline query (parse, window count, distinct users,
   * content dedup, ...). This expression parses once, navigates the two
   * nested objects directly, and emits the flat row from inside
@@ -42,33 +43,30 @@ import org.apache.spark.unsafe.types.UTF8String
   * duplicate keys in stringified subtrees collapsed last-wins).
   *
   * Replicated PERMISSIVE + partial-results contract (spec-pinned
-  * side-by-side, ProductViewParseSpec):
+  * side-by-side, ProductViewParseSpec). `json_ok` is false exactly
+  * where `JsonToStructs` over the record schema + `_corrupt_record`
+  * fills that column:
   *  - malformed JSON, a non-object root (array/scalar/`null`) -> a
-  *    NON-null row of all-null fields;
+  *    NON-null row of all-null wire fields, `json_ok` false;
   *  - empty / whitespace-only input -> NULL row (that is what
   *    JsonToStructs returns there — the one case the struct itself is
-  *    null);
+  *    null; [[graft.streaming.ProductViewPipeline.parseWithRaw]] reads
+  *    it as OK, as `_corrupt_record IS NULL` does);
   *  - missing field or JSON null -> null field;
   *  - a string-typed field holding a non-string token -> the token
   *    subtree re-rendered via copyCurrentStructure (duplicate keys
   *    preserved, floats through double: `5.00` -> "5.0");
-  *  - `properties`/`context` present but not an object -> that
-  *    SUBTREE's fields null, sibling fields keep their parsed values
-  *    (from_json's partial-results mode); a duplicate occurrence whose
-  *    conversion FAILS does not overwrite an earlier success (the
-  *    partial-results catch skips the field, leaving the slot), while
-  *    a successful re-conversion overwrites (last-wins);
-  *  - an empty-string value in a struct slot -> null subtree (Spark's
-  *    universal empty-string-as-null rule for non-string types).
-  *
-  * The dead-letter path ([[graft.streaming.ProductViewPipeline.parseWithRaw]])
-  * deliberately stays on `from_json`: it needs PERMISSIVE's
-  * corrupt-record CHANNEL (the raw payload captured next to the
-  * failure), which is a quarantine feature, not a hot-path one.
+  *  - `properties`/`context` present but not an object (an empty
+  *    string included) -> `json_ok` false, that SUBTREE's fields null,
+  *    sibling fields keep their parsed values (partial-results mode); a
+  *    duplicate occurrence whose conversion FAILS does not overwrite
+  *    an earlier success (the partial-results catch skips the field,
+  *    leaving the slot), while a successful re-conversion overwrites
+  *    (last-wins) — `json_ok` stays false either way.
   */
 case class ProductViewParse(child: Expression) extends UnaryExpression {
 
-  // analysis-time type check: from_json rejects a non-string child at
+  // analysis-time type check: JsonToStructs rejects a non-string child at
   // plan time; the kernel must too (a BinaryType Kafka value passed
   // without .cast("string") previously surfaced as a mid-job
   // ClassCastException)
@@ -107,7 +105,8 @@ object ProductViewParse {
     StructField("userid", StringType),
     StructField("productid", StringType),
     StructField("source", StringType),
-    StructField("timestamp", StringType)))
+    StructField("timestamp", StringType),
+    StructField("json_ok", BooleanType, nullable = false)))
 
   def productViewParse(wire: Column): Column =
     ColumnBridge.column(ProductViewParse(ColumnBridge.expression(wire)))
@@ -126,7 +125,13 @@ object ProductViewParse {
     .configure(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS, false)
     .build()
 
-  private def allNull(): InternalRow = new GenericInternalRow(6)
+  /** The row `JsonToStructs` yields for a corrupt record: every field null,
+    * `json_ok` false. */
+  private def corrupt(): InternalRow = {
+    val row = new GenericInternalRow(7)
+    row.setBoolean(6, false)
+    row
+  }
 
   /** StringType slot conversion — mirrors JacksonParser's StringType
     * converter: VALUE_STRING passes through, VALUE_NULL -> null, any
@@ -148,14 +153,14 @@ object ProductViewParse {
     * fully consumed as the current token. */
   private def skipValue(p: JsonParser): Unit = p.skipChildren()
 
-  /** Nested single-string-field struct slot (`properties.productid`,
-    * `context.source`). Returns the extracted value boxed, null for a
-    * JSON-null/empty-string subtree, or [[Fail]] when the value is
-    * wrong-typed — the caller must then LEAVE the slot untouched
-    * (from_json's partial-results catch skips the field without
-    * clearing an earlier duplicate's value). */
-  private val Fail = new Object
-  private def nestedValue(p: JsonParser, field: String): AnyRef =
+  /** Converts a nested single-string-field struct slot
+    * (`properties.productid`, `context.source`) into `row(slot)`: the
+    * extracted value, or null for a JSON-null subtree. Returns false
+    * when the value is wrong-typed (an empty string included: Spark
+    * refuses it for non-string types); the slot is then LEFT untouched
+    * (JsonToStructs' partial-results catch skips the field without
+    * clearing an earlier duplicate's value) and the record is corrupt. */
+  private def nested(p: JsonParser, field: String, row: InternalRow, slot: Int): Boolean =
     p.currentToken() match {
       case JsonToken.START_OBJECT =>
         var v: UTF8String = null
@@ -164,11 +169,10 @@ object ProductViewParse {
           p.nextToken()
           if (n == field) v = strValue(p) else skipValue(p)
         }
-        v
-      case JsonToken.VALUE_NULL => null
-      // Spark's universal empty-string-as-null for non-string types
-      case JsonToken.VALUE_STRING if p.getTextLength < 1 => null
-      case _ => skipValue(p); Fail
+        row.update(slot, v)
+        true
+      case JsonToken.VALUE_NULL => row.setNullAt(slot); true
+      case _ => skipValue(p); false
     }
 
   /** Called from generated code — must stay public + static-friendly.
@@ -180,8 +184,9 @@ object ProductViewParse {
       try {
         val first = p.nextToken()
         if (first == null) return null // blank input -> NULL struct
-        if (first != JsonToken.START_OBJECT) return allNull()
-        val row = new GenericInternalRow(6)
+        if (first != JsonToken.START_OBJECT) return corrupt()
+        val row = new GenericInternalRow(7)
+        var ok = true
         while (p.nextToken() != JsonToken.END_OBJECT) {
           val name = p.currentName()
           p.nextToken()
@@ -190,17 +195,14 @@ object ProductViewParse {
             case "messageid" => row.update(1, strValue(p))
             case "userid" => row.update(2, strValue(p))
             case "timestamp" => row.update(5, strValue(p))
-            case "properties" =>
-              val v = nestedValue(p, "productid")
-              if (v ne Fail) row.update(3, v)
-            case "context" =>
-              val v = nestedValue(p, "source")
-              if (v ne Fail) row.update(4, v)
+            case "properties" => ok &= nested(p, "productid", row, 3)
+            case "context" => ok &= nested(p, "source", row, 4)
             case _ => skipValue(p)
           }
         }
+        row.setBoolean(6, ok)
         row
       } finally p.close()
-    } catch { case _: Exception => allNull() }
+    } catch { case _: Exception => corrupt() }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 
 /** The reference's flagship streaming pipeline re-expressed Spark-first
@@ -23,64 +22,42 @@ import org.apache.spark.sql.Row
   */
 object ProductViewPipeline {
 
-  /** Wire-record schema (reference v1:15-20 projects only
-    * context.source + timestamp; we parse the full §1.2 record so
-    * userid/productid reach the engine — the reference's stated but
-    * unrealized intent, v1:14,46). */
-  val productViewSchema: StructType = StructType(Seq(
-    StructField("event", StringType),
-    StructField("messageid", StringType),
-    StructField("userid", StringType),
-    StructField("properties", StructType(Seq(
-      StructField("productid", StringType)))),
-    StructField("context", StructType(Seq(
-      StructField("source", StringType)))),
-    StructField("timestamp", StringType)))
-
   /** Kafka `value`-bytes (or any `value: string/binary` column) ->
-    * typed click-event rows (reference v1:29-40). The JSON leg is the
-    * codegen'd [[graft.functions.ProductViewParse]] kernel (one
-    * Jackson pass to the flat record; bit-parity with
-    * `from_json(value, productViewSchema)` spec-pinned — r12, was the
-    * hot path's last CodegenFallback), and the timestamp goes through
-    * the codegen'd [[graft.functions.WireTimestamp]] — same accepted
-    * grammar and UTC semantics as
+    * typed click-event rows (reference v1:29-40): [[parseWithRaw]]
+    * without its two quarantine columns, which the optimizer prunes. */
+  def parse(raw: DataFrame): DataFrame =
+    parseWithRaw(raw).drop("raw_value", "json_ok")
+
+  /** [[parse]] that also keeps the raw wire text (`raw_value`) and
+    * whether the JSON parsed (`json_ok`) — the input [[deadLetterQuery]]
+    * quarantines from; `json_ok` tells a wholly unparseable payload from
+    * a parseable record whose fields fail validation.
+    *
+    * The JSON leg is the codegen'd [[graft.functions.ProductViewParse]]
+    * kernel: one Jackson pass to the flat record plus its validity bit,
+    * bit-parity with Spark's PERMISSIVE JSON reader (fields, and
+    * `json_ok` against `_corrupt_record IS NULL`) pinned by
+    * ProductViewParseSpec. The reference projects only context.source +
+    * timestamp (v1:15-20); the full record is parsed so userid/productid
+    * reach the engine — the reference's stated but unrealized intent,
+    * v1:14,46. The timestamp goes through the codegen'd [[graft.functions.WireTimestamp]] — same
+    * accepted grammar and UTC semantics as
     * `to_timestamp(c, "yyyy-MM-dd HH:mm:ss[.SSS][XX]")` (spec-asserted)
     * without the per-row optional-section formatter cost. */
-  def parse(raw: DataFrame): DataFrame =
+  def parseWithRaw(raw: DataFrame): DataFrame =
     raw
-      .select(graft.functions.ProductViewParse
-        .productViewParse(col("value").cast("string")).as("v"))
+      .select(col("value").cast("string").as("raw_value"))
+      .select(col("raw_value"),
+        graft.functions.ProductViewParse.productViewParse(col("raw_value")).as("v"))
       .select(
+        col("raw_value"),
+        // blank input is the NULL struct: OK, as Spark's JSON reader has it
+        coalesce(col("v.json_ok"), lit(true)).as("json_ok"),
         col("v.event").as("event"),
         col("v.messageid").as("messageid"),
         col("v.userid").as("userid"),
         col("v.productid").as("productid"),
         col("v.source").as("source"),
-        graft.functions.WireTimestamp.wireTimestamp(col("v.timestamp"))
-          .as("timestamp"))
-
-  /** [[parse]] variant that PRESERVES the raw wire bytes and parse
-    * provenance alongside the typed fields — the input
-    * [[deadLetterQuery]] quarantines from. `json_ok` distinguishes a
-    * wholly unparseable payload from a parseable record whose fields
-    * fail validation, via PERMISSIVE mode's corrupt-record channel
-    * (from_json does NOT null the struct on malformed JSON — it yields
-    * an all-null row, so struct-null is not a usable signal). */
-  def parseWithRaw(raw: DataFrame): DataFrame =
-    raw
-      .select(col("value").cast("string").as("raw_value"))
-      .withColumn("v", from_json(col("raw_value"),
-        productViewSchema.add("_corrupt_record", StringType),
-        Map("columnNameOfCorruptRecord" -> "_corrupt_record")))
-      .select(
-        col("raw_value"),
-        col("v._corrupt_record").isNull.as("json_ok"),
-        col("v.event").as("event"),
-        col("v.messageid").as("messageid"),
-        col("v.userid").as("userid"),
-        col("v.properties.productid").as("productid"),
-        col("v.context.source").as("source"),
         graft.functions.WireTimestamp.wireTimestamp(col("v.timestamp"))
           .as("timestamp"))
 

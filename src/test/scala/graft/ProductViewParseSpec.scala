@@ -2,38 +2,54 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.functions.ProductViewParse
 import graft.streaming.{ProductViewPipeline => P, Simulator}
 
-/** Bit-parity of the compiled [[ProductViewParse]] kernel against the
-  * `from_json(value, productViewSchema)` + flatten spelling it
-  * replaced on the hot path — the VectorExpressions/WinnowFps
-  * discipline: a kernel may only be faster, never different. The
-  * comparison runs side by side IN Spark, so whatever from_json's
-  * PERMISSIVE/partial-results behavior is on this engine version, the
-  * kernel must reproduce it.
+/** Bit-parity of the compiled [[ProductViewParse]] kernel, the engine's
+  * only parser of the wire record, against the `from_json` + flatten
+  * spelling it replaced — the VectorExpressions/WinnowFps discipline: a
+  * kernel may only be faster, never different. The comparison runs side
+  * by side IN Spark, so whatever from_json's PERMISSIVE/partial-results
+  * behavior is on this engine version, the kernel must reproduce it:
+  * the six fields, the NULL struct, and `json_ok` against
+  * `_corrupt_record IS NULL`.
   */
 class ProductViewParseSpec extends SparkSpec {
+
+  /** The nested wire record the kernel is compared against. */
+  private val productViewSchema: StructType = StructType(Seq(
+    StructField("event", StringType),
+    StructField("messageid", StringType),
+    StructField("userid", StringType),
+    StructField("properties", StructType(Seq(
+      StructField("productid", StringType)))),
+    StructField("context", StructType(Seq(
+      StructField("source", StringType)))),
+    StructField("timestamp", StringType)))
 
   private def viaKernel(df: DataFrame): DataFrame =
     df.select(col("value"),
       ProductViewParse.productViewParse(col("value")).as("v"))
       .select(col("value"), col("v").isNull.as("struct_null"),
         col("v.event"), col("v.messageid"), col("v.userid"),
-        col("v.productid"), col("v.source"), col("v.timestamp"))
+        col("v.productid"), col("v.source"), col("v.timestamp"),
+        coalesce(col("v.json_ok"), lit(true)).as("json_ok"))
 
   private def viaFromJson(df: DataFrame): DataFrame =
     df.select(col("value"),
-      from_json(col("value"), P.productViewSchema).as("v"))
+      from_json(col("value"), productViewSchema.add("_corrupt_record", StringType),
+        Map("columnNameOfCorruptRecord" -> "_corrupt_record")).as("v"))
       .select(col("value"), col("v").isNull.as("struct_null"),
         col("v.event"), col("v.messageid"), col("v.userid"),
         col("v.properties.productid"), col("v.context.source"),
-        col("v.timestamp"))
+        col("v.timestamp"), col("v._corrupt_record").isNull.as("json_ok"))
 
   private def assertParity(df: DataFrame): Unit = {
     val k = viaKernel(df).collect().map(_.toSeq)
     val f = viaFromJson(df).collect().map(_.toSeq)
+    assert(k.length == f.length)
     val diffs = k.zip(f).collect { case (a, b) if a != b => (a, b) }
     assert(diffs.isEmpty, s"kernel != from_json on ${diffs.take(3).mkString("; ")}")
   }
@@ -89,6 +105,13 @@ class ProductViewParseSpec extends SparkSpec {
       // empty-string-as-null for non-string types; in a STRING slot it
       // stays the empty string
       """{"properties":"","event":""}""",
+      """{"properties":{"productid":"keep3"},"properties":""}""",
+      """{"context":{"source":"s"},"context":"","event":"e"}""",
+      // a wire key named like the corrupt-record column is not it
+      """{"_corrupt_record":"x","event":"e"}""",
+      // a JSON string root, empty; and a record cut short
+      "\"\"",
+      """{"event":"a","context":{"source":"s"}""",
       // trailing content after the root value
       """{"event":"a"} trailing""",
       """{"event":"a"}{"event":"b"}""")
@@ -108,11 +131,14 @@ class ProductViewParseSpec extends SparkSpec {
   }
 
   test("product_view_parse stays inside whole-stage codegen") {
-    val e = Simulator.productViewJson(graft.model.Tables.events(spark, sf))
-      .select(ProductViewParse.productViewParse(col("value")).as("v"))
-    val planLine = e.queryExecution.executedPlan.toString.linesIterator
-      .find(_.contains("product_view_parse")).getOrElse("")
-    assert(planLine.trim.startsWith("*("),
-      s"product_view_parse not in a codegen span: $planLine")
+    val wire = Simulator.productViewJson(graft.model.Tables.events(spark, sf))
+    for (e <- Seq(wire.select(ProductViewParse.productViewParse(col("value")).as("v")),
+                  P.parseWithRaw(wire))) {
+      val planLine = e.queryExecution.executedPlan.toString.linesIterator
+        .find(_.contains("product_view_parse")).getOrElse("")
+      // the operator name after the tree-drawing prefix (`+- `, `:  +- `)
+      assert(planLine.replaceFirst("""^[\s:+-]*""", "").startsWith("*("),
+        s"product_view_parse not in a codegen span: $planLine")
+    }
   }
 }

@@ -43,6 +43,15 @@ class SourceAuditSpec extends AnyFunSuite {
         s"bounded/justified entry, or remove: ${extra.mkString("; ")}")
   }
 
+  /** The first `needle` in `file`, if any, sits inside `def name`. */
+  private def assertInsideDef(file: String, needle: String, name: String): Unit = {
+    val src = Files.readString(root.resolve(file))
+    val at = src.indexOf(needle)
+    val enclosing = """def (\w+)""".r.findAllMatchIn(src.take(at)).toSeq.lastOption.map(_.group(1))
+    assert(at < 0 || enclosing.contains(name),
+      s"$file has $needle in ${enclosing.getOrElse("no def")}, not $name")
+  }
+
   test("driver-side .collect() confined to audited bounded sites") {
     // every entry's bound must be independent of corpus size
     audit(".collect()", """\.collect\(\)""", Map(
@@ -146,11 +155,15 @@ class SourceAuditSpec extends AnyFunSuite {
     // per checkpoint file and keeps the session's full partition count
     val file = "streaming/ProductViewPipeline.scala"
     audit(".start()", """\.start\(\)""", Map(file -> (1, "startWithStateStores")))
-    val src = Files.readString(root.resolve(file))
-    val at = src.indexOf(".start()")
-    val enclosing = """def (\w+)""".r.findAllMatchIn(src.take(at)).toSeq.lastOption.map(_.group(1))
-    assert(at < 0 || enclosing.contains("startWithStateStores"),
-      s"$file starts a query in ${enclosing.getOrElse("no def")}, not startWithStateStores")
+    assertInsideDef(file, ".start()", "startWithStateStores")
+  }
+
+  test("from_json only in Simulator.splitJsonArray: ProductViewParse parses the wire record") {
+    // one parser per record: a second from_json spelling of the
+    // product-view record would drift from the kernel's spec-pinned parity
+    val file = "streaming/Simulator.scala"
+    audit("from_json", """from_json\(""", Map(file -> (1, "splitJsonArray's array<string> split")))
+    assertInsideDef(file, "from_json(", "splitJsonArray")
   }
 
   test("collected-array sorts audited for null sort keys (Spark vs DuckDB place them oppositely)") {

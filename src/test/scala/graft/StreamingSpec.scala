@@ -228,7 +228,14 @@ class StreamingSpec extends SparkSpec {
         "this is not json at all",
         // parseable JSON but no context.source field
         """{"event":"ProductView","messageid":"m4","timestamp":"2021-03-07 19:03:00"}""",
-        rec("not-a-timestamp", "desktop", "m5"))
+        rec("not-a-timestamp", "desktop", "m5"),
+        // from_json's corrupt-record rule, end to end: a wrong-typed
+        // subtree, an empty-string struct slot (its source and
+        // timestamp are fine) and a non-object root are malformed
+        """{"event":"ProductView","messageid":"m6","context":[1],"timestamp":"2021-03-07 19:04:00"}""",
+        """{"event":"ProductView","messageid":"m7","properties":"",""" +
+          """"context":{"source":"desktop"},"timestamp":"2021-03-07 19:05:00"}""",
+        "[1]")
       q.processAllAvailable()
       val good = spark.read.parquet(goodDir)
       assert(good.count() == 2L)
@@ -236,7 +243,8 @@ class StreamingSpec extends SparkSpec {
       assert(!good.columns.contains("raw_value"), "raw bytes leaked to the good path")
       val dead = spark.read.parquet(deadDir)
       val reasons = dead.select("reason").as[String].collect().sorted.toSeq
-      assert(reasons == Seq("bad_timestamp", "malformed_json", "no_source"), s"got $reasons")
+      assert(reasons == Seq("bad_timestamp", "malformed_json", "malformed_json",
+        "malformed_json", "malformed_json", "no_source"), s"got $reasons")
       // quarantine preserves the exact original payload for replay
       val raws = dead.select("raw_value").as[String].collect()
       assert(raws.contains("this is not json at all"))
