@@ -36,8 +36,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [<query> ...]")
     val (sfDir, outDir) = (args(0), args(1))
-    // optional trailing query names: dump only those (fast iteration)
+    // optional trailing query names: dump only those (fast iteration);
+    // a mistyped name fails here rather than dumping nothing
     val only = args.drop(2).toSet
+    Inspect.requireKnown(only.toSeq.sorted, SparkEntry.queries.keys)
+    val attempted = if (only.isEmpty) SparkEntry.queries.keySet else only
     val spark = Session.local()
     // write µs timestamps (not INT96) so DuckDB reads the same type
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
@@ -51,8 +54,7 @@ object Verify {
     // in this query's catch, so the query fails loudly (dir absent →
     // driver records err via names.json) and the battery continues.
     SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.nonEmpty && !only.contains(name)) ()
-      else {
+      if (attempted(name)) {
         // isolate queries, same rule as Bench: several queries persist
         // internal relations by design (dedupClusters, curationFunnel,
         // exactSubstring, heavyHitters) — a leftover block must not
@@ -86,11 +88,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // manifest of every registered query, so the local gate can FAIL
-    // on a query that crashed (its output dir is simply absent — a
+    // manifest of every query this run attempted, so the local gate can
+    // FAIL on a query that crashed (its output dir is simply absent — a
     // glob over dirs alone would silently skip it)
     Files.writeString(Paths.get(s"$outDir/names.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(Json.str).mkString("[", ",", "]"))
+      attempted.toSeq.sorted.map(Json.str).mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -249,18 +249,21 @@ object ProductViewPipeline {
     try writer.start() finally spark.conf.set(shufflePartitions, conf)
   }
 
-  /** Starts `writer` on at most as many state stores as cores:
-    * `min(spark.sql.shuffle.partitions, defaultParallelism)`. Map-side
+  /** Starts `writer` on at most as many state stores as its share of
+    * the cores: `min(spark.sql.shuffle.partitions, cores / sharedBy)`,
+    * at least 1, where `sharedBy` queries run side by side. Map-side
     * partial aggregation means a store receives at most map tasks x
     * (source, window) keys, not events; stores beyond the core count
     * cannot run concurrently, and each pays a load plus a delta-file
     * commit every batch, the empty watermark batch included. Derived
     * from the cluster, not the input, because a Kafka stream has no
     * input size at start. Only ever lowers the count. */
-  private def startOnCores(counts: DataFrame, writer: DataStreamWriter[Row]): StreamingQuery = {
+  private def startOnCores(counts: DataFrame, writer: DataStreamWriter[Row],
+                           sharedBy: Int = 1): StreamingQuery = {
     val spark = counts.sparkSession
     val conf = spark.conf.get(shufflePartitions).toInt
-    startWithStateStores(spark, math.min(conf, spark.sparkContext.defaultParallelism))(writer)
+    val share = math.max(1, spark.sparkContext.defaultParallelism / sharedBy)
+    startWithStateStores(spark, math.min(conf, share))(writer)
   }
 
   /** v1 sink: console, update mode (reference v1:60-65), on at most
@@ -278,27 +281,33 @@ object ProductViewPipeline {
   /** v2 foreachBatch sink: per-epoch sort descending then emit
     * (reference v2:8-14,77-81); `emit` defaults to console.
     *
-    * The sort is `repartition(1).sortWithinPartitions`, not a global
-    * `sort`: inside foreachBatch, a range partitioner's sampling job
-    * executes the whole micro-batch plan, state-store save included,
-    * so every store would load and commit twice per batch. One
-    * partition gives the same total order in one job, and costs
-    * nothing here: the update output is bounded by sources x windows
-    * touched, and an emit collects it to the driver anyway. State
-    * stores are capped at the core count ([[startOnCores]]). */
+    * The batch is collected once and sorted on the driver; `emit` gets
+    * the sorted rows as a local DataFrame. So the stateful plan runs in
+    * one job per batch, its state stores commit whatever `emit` does
+    * (Spark fails a stateful foreachBatch whose partitions were not all
+    * consumed), and `emit`'s own `collect`/`show` runs no job. The
+    * update output is bounded by sources x windows the batch touches.
+    * State stores are capped at the core count ([[startOnCores]]). */
   def sortedBatchQuery(
       counts: DataFrame,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes"))(
       emit: (DataFrame, Long) => Unit = (df, _) => df.show(20, truncate = false))
       : StreamingQuery =
-    startOnCores(counts, counts.writeStream
+    startOnCores(counts, sortedBatchWriter(counts, checkpointDir, trigger)(emit))
+
+  private def sortedBatchWriter(counts: DataFrame, checkpointDir: String, trigger: Trigger)(
+      emit: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    counts.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (df: DataFrame, epochId: Long) =>
-        emit(df.repartition(1).sortWithinPartitions(desc("source_number")), epochId)
+        val n = df.schema.fieldIndex("source_number")
+        val rows = df.collect().sortBy(_.getLong(n))(Ordering[Long].reverse)
+        emit(df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
+          epochId)
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger))
+      .trigger(trigger)
 
   /** v2 parquet sink: append mode — only watermark-finalized windows
     * land; (source, source_number) projection matches the reference's
@@ -310,14 +319,18 @@ object ProductViewPipeline {
       outputDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
-    startOnCores(counts, counts
+    startOnCores(counts, parquetWriter(counts, outputDir, checkpointDir, trigger))
+
+  private def parquetWriter(counts: DataFrame, outputDir: String, checkpointDir: String,
+                            trigger: Trigger): DataStreamWriter[Row] =
+    counts
       .drop("start", "end")
       .writeStream
       .outputMode(OutputMode.Append())
       .format("parquet")
       .option("path", outputDir)
       .option("checkpointLocation", checkpointDir)
-      .trigger(trigger))
+      .trigger(trigger)
 
   /** W8 parity — the reference's concurrent dual-sink fan-out
     * (reference v2:77-91): BOTH the sorted-console foreachBatch query
@@ -328,13 +341,16 @@ object ProductViewPipeline {
     * the console query only, which silently orphans the parquet one on
     * failure).
     *
-    * Each query runs its stateful plan once per micro-batch: the
-    * console emit sorts one partition rather than range-partitioning
-    * (a global sort re-runs the state-store save to sample its
-    * bounds), and each query gets `min(spark.sql.shuffle.partitions,
-    * cores)` state stores, since stores beyond the core count only add
-    * a load and a commit per batch. The reference runs 2
-    * (`spark.sql.shuffle.partitions=2`, v2). */
+    * Each query runs its stateful plan in one job per micro-batch: the
+    * console query sorts its collected batch on the driver
+    * ([[sortedBatchQuery]]). The two queries split the cores: each
+    * gets `min(spark.sql.shuffle.partitions, cores / 2)` state stores
+    * ([[startOnCores]]). On all the cores each, Spark's FIFO scheduler
+    * queues one query's state-store wave behind the other's, so which
+    * sink finishes a batch first is a race between their job
+    * submissions; on half each, both stateful stages fit side by side
+    * and a sink's batch time depends far less on that race. The reference
+    * runs 2 (`spark.sql.shuffle.partitions=2`, v2). */
   def dualSinkQueries(
       counts: DataFrame,
       outputDir: String,
@@ -342,7 +358,8 @@ object ProductViewPipeline {
       trigger: Trigger = Trigger.ProcessingTime("5 minutes"))(
       emit: (DataFrame, Long) => Unit = (df, _) => df.show(20, truncate = false))
       : (StreamingQuery, StreamingQuery) = {
-    val console = sortedBatchQuery(counts, s"$checkpointBase/console", trigger)(emit)
+    val console = startOnCores(counts,
+      sortedBatchWriter(counts, s"$checkpointBase/console", trigger)(emit), sharedBy = 2)
     // if the SECOND start throws (unwritable output dir, checkpoint
     // conflict), stop the first before rethrowing — otherwise the
     // console query keeps running with no handle returned to the
@@ -350,7 +367,8 @@ object ProductViewPipeline {
     // the orphaned-query failure the scaladoc faults the reference
     // for)
     val parquet =
-      try parquetQuery(counts, outputDir, s"$checkpointBase/parquet", trigger)
+      try startOnCores(counts,
+        parquetWriter(counts, outputDir, s"$checkpointBase/parquet", trigger), sharedBy = 2)
       catch {
         case t: Throwable =>
           try console.stop()
@@ -380,11 +398,17 @@ object ProductViewPipeline {
 
   /** File-drop source (NiFi GetFile equivalent, S3 row in SURVEY §2.1):
     * each file holds one raw JSON record per line — the same bytes a
-    * Kafka `value` would carry. */
-  def fileSource(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 10): DataFrame =
-    spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(dir)
+    * Kafka `value` would carry. Uncapped by default, each trigger reads
+    * every file present, as [[kafkaSource]] reads every offset: a
+    * backlog drains in one micro-batch, which pays the per-batch
+    * planning and state-commit cost once. `maxFilesPerTrigger` caps a
+    * batch at that many files (W9 rate limiting). */
+  def fileSource(spark: SparkSession, dir: String,
+                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val base = spark.readStream
+    maxFilesPerTrigger.fold(base)(n =>
+      base.option("maxFilesPerTrigger", n.toString)).text(dir)
+  }
 
   /** Batch export layer (reference dag_file.py): register the parquet
     * output as an external table (K5) ... */

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * the `events` table into §1.2-shaped ProductView JSON records —
   * UpdateRecord timestamp stamping (P10), per-record splitting (W10)
   * and array-bracket stripping (P9) all become plain Spark
-  * expressions; rate limiting (W9, NiFi ControlRate) maps to
-  * `maxFilesPerTrigger` / `maxOffsetsPerTrigger` on the source side.
+  * expressions; rate limiting (W9, NiFi ControlRate) maps to the
+  * opt-in `maxFilesPerTrigger` / `maxOffsetsPerTrigger` caps on the
+  * source side.
   */
 object Simulator {
 
@@ -58,8 +59,9 @@ object Simulator {
       org.apache.spark.sql.types.DataType.fromDDL("array<string>"))).as("value"))
 
   /** Write the simulated stream to a file-source dir consumed by
-    * [[ProductViewPipeline.fileSource]]; `numFiles` controls
-    * micro-batch granularity under `maxFilesPerTrigger`. */
+    * [[ProductViewPipeline.fileSource]]; `numFiles` sets the
+    * micro-batch granularity only when the source caps
+    * `maxFilesPerTrigger` (uncapped, a backlog is one batch). */
   def writeFileDrops(events: DataFrame, dir: String, numFiles: Int = 4): Unit =
     productViewJson(events).repartition(numFiles).write.mode("append").text(dir)
 

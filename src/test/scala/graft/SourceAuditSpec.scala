@@ -69,7 +69,11 @@ class SourceAuditSpec extends AnyFunSuite {
       "sources/WireEvents.scala" -> (1,
         "writeTsStats manifest collect: one ~100 B (path, len, min, max) " +
           "tuple per FILE — O(files), the same order as the listing the " +
-          "driver already holds for planning; never O(rows)")))
+          "driver already holds for planning; never O(rows)"),
+      "streaming/ProductViewPipeline.scala" -> (1,
+        "sortedBatchQuery's driver-side sort: one update row per " +
+          "(source, window) the micro-batch touched — never O(events); " +
+          "the console emit it feeds collects the same rows")))
   }
 
   test("Scala udf() confined to sketch probes with no codegen'd builtin") {

@@ -7,7 +7,7 @@ import org.scalatest.concurrent.Eventually.{eventually, timeout}
 import org.scalatest.time.{Seconds, Span}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
-import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MicroBatchExecution, StreamExecution, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.streaming.{LocalCheckpointFileManager, ProductViewPipeline => P, Simulator}
@@ -104,7 +104,7 @@ class StreamingSpec extends SparkSpec {
     val ev2 = graft.model.Tables.events(spark, sf).filter(col("event_id") >= 500)
     Simulator.writeFileDrops(ev1, srcDir)
     def run(): Unit = {
-      val counts = P.windowedCounts(P.parse(P.fileSource(spark, srcDir, maxFilesPerTrigger = 2)))
+      val counts = P.windowedCounts(P.parse(P.fileSource(spark, srcDir, maxFilesPerTrigger = Some(2))))
       val q = counts.writeStream.outputMode("update")
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
           df.collect().foreach { r =>
@@ -282,30 +282,33 @@ class StreamingSpec extends SparkSpec {
       .sparkSession.conf.getOption(managerKey).getOrElse("unset")
 
   test("foreachBatch emits each micro-batch globally sorted descending (v2 parity)") {
-    // ... in ONE job: a global sort's range-partitioner sampling job
-    // would re-run the stateful plan, state-store commits included.
-    // Jobs started inside the emit carry the batch id as a local
-    // property; a sentinel job seen last proves every earlier job
-    // event has reached the listener.
-    val tag = "graft.test.emitBatch"
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
+    // ... in ONE job per micro-batch, the emit's own collect included:
+    // a global sort's range-partitioner sampling job would re-run the
+    // stateful plan, state-store commits included. Every job a batch
+    // starts carries the query id and batch id as local properties; a
+    // sentinel job seen last proves every earlier job event has
+    // reached the listener.
+    val sentinel = "graft.test.sentinel"
+    val sentinelSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), AtomicInteger]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
-          .foreach(b => jobs.computeIfAbsent(b, _ => new AtomicInteger).incrementAndGet())
+        Option(e.properties).foreach { p =>
+          if (p.getProperty(sentinel) != null) sentinelSeen.set(true)
+          else Option(p.getProperty(StreamExecution.QUERY_ID_KEY)).foreach { id =>
+            jobs.computeIfAbsent((id, p.getProperty(MicroBatchExecution.BATCH_ID_KEY)),
+              _ => new AtomicInteger).incrementAndGet()
+          }
+        }
     }
     spark.sparkContext.addSparkListener(listener)
     val in = MemoryStream[String]
     val counts = P.windowedCounts(P.parse(in.toDF()))
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
     val q = P.sortedBatchQuery(counts, tmp(), Trigger.ProcessingTime(0)) { (df, batch) =>
-      val sc = df.sparkSession.sparkContext
-      sc.setLocalProperty(tag, batch.toString)
-      try {
-        val rows = df.select("source_number")
-          .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSeq
-        seen.synchronized { seen += batch -> rows }
-      } finally sc.setLocalProperty(tag, null)
+      val rows = df.select("source_number")
+        .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSeq
+      seen.synchronized { seen += batch -> rows }
     }
     try {
       in.addData(
@@ -319,21 +322,72 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     try {
-      spark.sparkContext.setLocalProperty(tag, "sentinel")
+      spark.sparkContext.setLocalProperty(sentinel, "sentinel")
       try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setLocalProperty(tag, null)
-      eventually(timeout(Span(30, Seconds)))(assert(jobs.containsKey("sentinel")))
+      finally spark.sparkContext.setLocalProperty(sentinel, null)
+      eventually(timeout(Span(30, Seconds)))(assert(sentinelSeen.get))
     } finally spark.sparkContext.removeSparkListener(listener)
     val batches = seen.synchronized(seen.toList)
     val data = batches.filter(_._2.nonEmpty)
     assert(data.size >= 2, s"expected two data micro-batches, got $batches")
+    val perBatch = jobs.asScala.collect { case ((id, b), n) if id == q.id.toString => b -> n.get }
+    assert(perBatch.keySet == batches.map(_._1.toString).toSet,
+      s"jobs by batch $perBatch, emitted batches $batches")
     batches.foreach { case (b, rows) =>
-      val n = Option(jobs.get(b.toString)).map(_.get)
-      assert(n.contains(1), s"batch $b ran $n jobs in its emit, expected 1")
+      assert(perBatch(b.toString) == 1, s"batch $b ran ${perBatch(b.toString)} jobs, expected 1")
       assert(rows == rows.sorted.reverse, s"batch $b not sorted desc: $rows")
     }
     assert(data.head._2 == Seq(3L, 2L, 1L), s"first batch: ${data.head._2}")
     assert(data(1)._2 == Seq(3L, 1L), s"second batch: ${data(1)._2}")
+  }
+
+  test("an emit that reads nothing still commits every state store") {
+    // Spark fails a stateful foreachBatch batch whose partitions were
+    // not all consumed (STATE_STORE_COMMIT_VALIDATION_FAILED); the sort
+    // runs the batch itself, so the emit may ignore its frame
+    val srcDir = twoFileInput(); val base = tmp()
+    val counts = P.windowedCounts(P.parse(P.fileSource(spark, srcDir)))
+    val (console, parquet) =
+      P.dualSinkQueries(counts, s"$base/out", s"$base/chk", Trigger.AvailableNow())((_, _) => ())
+    console.awaitTermination(); parquet.awaitTermination()
+    Seq(console, parquet).foreach(q => assert(q.exception.isEmpty, s"${q.exception}"))
+    val committed = console.recentProgress.filter(_.numInputRows > 0)
+      .map(_.stateOperators.head.numRowsUpdated).sum
+    // 60 events in 30 minutes over three sources: 18 (window, source) keys
+    assert(committed == 18L, s"console state rows updated: $committed")
+    assert(spark.read.parquet(s"$base/out").count() == 12L)
+  }
+
+  test("a file backlog drains in one micro-batch per sink; maxFilesPerTrigger still caps it") {
+    // 12 files of 5 events a minute apart, modified in event-time
+    // order, so no event is late however the files are batched
+    val sources = Seq("desktop", "mobile-app", "mobile-web")
+    val srcDir = tmp()
+    val t0 = System.currentTimeMillis() - 60000L
+    (0 until 12).foreach { f =>
+      val path = java.nio.file.Paths.get(srcDir, f"drop-$f%02d.txt")
+      Files.writeString(path, (0 until 5).map { i =>
+        val m = f * 5 + i
+        rec(f"2021-03-07 19:$m%02d:00", sources(m % 3))
+      }.mkString("\n"))
+      path.toFile.setLastModified(t0 + 1000L * f)
+    }
+    def drain(cap: Option[Int]): Seq[Int] = {
+      val latest = new java.util.concurrent.ConcurrentHashMap[(java.sql.Timestamp, String), Long]()
+      val counts = P.windowedCounts(P.parse(P.fileSource(spark, srcDir, cap)))
+      val base = tmp()
+      val qs = P.dualSinkQueries(counts, s"$base/out", s"$base/chk", Trigger.AvailableNow()) {
+        (df, _) => df.collect().foreach(r => latest.put((r.getTimestamp(0), r.getString(2)), r.getLong(3)))
+      }
+      val both = Seq(qs._1, qs._2)
+      both.foreach(_.awaitTermination())
+      both.foreach(q =>
+        assert(q.recentProgress.map(_.numInputRows).sum == 60L, s"$cap: query ${q.id} input rows"))
+      assert(latest.values().asScala.map(x => x: Long).sum == 60L, s"$cap: console counts $latest")
+      both.map(_.recentProgress.count(_.numInputRows > 0))
+    }
+    assert(drain(None) == Seq(1, 1), "uncapped data micro-batches per sink")
+    assert(drain(Some(2)) == Seq(6, 6), "capped data micro-batches per sink")
   }
 
   test("W8: console + parquet sinks run concurrently from ONE lineage (v2 parity)") {
@@ -387,18 +441,19 @@ class StreamingSpec extends SparkSpec {
     finally c.close()
     withShufflePartitions(32) {
       val counts = P.windowedCounts(P.parse(P.fileSource(spark, srcDir)))
-      def started(name: String)(start: => Seq[StreamingQuery]): Unit = {
+      def started(name: String, stores: Int = cores)(start: => Seq[StreamingQuery]): Unit = {
         val qs = start
         assert(spark.conf.get("spark.sql.shuffle.partitions") == "32",
           s"$name left the session conf changed")
         qs.foreach { q =>
           q.awaitTermination()
-          assert(stateStores(q) == cores, s"$name: ${stateStores(q)} state stores")
+          assert(stateStores(q) == stores, s"$name: ${stateStores(q)} state stores")
         }
       }
       started("consoleQuery")(Seq(P.consoleQuery(counts, tmp(), Trigger.AvailableNow())))
       started("parquetQuery")(Seq(P.parquetQuery(counts, tmp(), tmp(), Trigger.AvailableNow())))
-      started("dualSinkQueries") {
+      // the two dual-sink queries run side by side: half the cores each
+      started("dualSinkQueries", stores = cores / 2) {
         val (console, parquet) =
           P.dualSinkQueries(counts, tmp(), tmp(), Trigger.AvailableNow())((df, _) => df.collect())
         Seq(console, parquet)
@@ -459,7 +514,7 @@ class StreamingSpec extends SparkSpec {
     }
     assert(oldStores == Seq(32, 32), s"old start: $oldStores")
     assert(oldManagers == Seq(sparkManager, sparkManager), s"old start: $oldManagers")
-    // resumed at the same conf: the builders start on 8 stores and
+    // resumed at the same conf: the builders start on 4 stores each and
     // install the local manager, the checkpoint's offset log overrides
     // the store count
     drop(srcDir, "b.txt", recs.drop(40))

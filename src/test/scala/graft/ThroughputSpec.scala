@@ -29,7 +29,7 @@ class ThroughputSpec extends SparkSpec {
 
     val t0 = System.nanoTime()
     val name = s"tp$attempt"
-    val counts = P.windowedCounts(P.parse(P.fileSource(spark, srcDir, maxFilesPerTrigger = 8)))
+    val counts = P.windowedCounts(P.parse(P.fileSource(spark, srcDir)))
     val q = counts.writeStream
       .outputMode("update").format("memory").queryName(name)
       .option("checkpointLocation", Files.createTempDirectory("graft-tp-chk").toString)

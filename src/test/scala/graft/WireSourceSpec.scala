@@ -373,9 +373,6 @@ class WireSourceSpec extends SparkSpec {
     def runBoth(parsed: DataFrame, out: String, chk: String): Unit = {
       val (console, parquet) =
         P.dualSinkQueries(P.windowedCounts(parsed), out, chk,
-          // the emit must CONSUME the frame: Spark 4 validates that a
-          // stateful query's foreachBatch processed every partition
-          // (STATE_STORE_COMMIT_VALIDATION_FAILED otherwise)
           Trigger.AvailableNow())((df, _) => { df.collect(); () })
       console.awaitTermination()
       parquet.awaitTermination()
