@@ -135,26 +135,18 @@ object PipelineQueries {
     * multi-batch eviction/late-data semantics stay StatefulSpec's
     * surface (SURVEY §5.2).
     *
-    * Determinism: the read EXPLICITLY sets `maxFilesPerTrigger` to
-    * Int.MaxValue, so the file source's per-batch ReadLimit can never
-    * split the wire files — every data row lands in micro-batch 1,
-    * whose epoch watermark can drop nothing, making the inner join's
-    * output exactly the batch range join at wire (millisecond)
-    * timestamp granularity. The option is LOAD-BEARING, not redundant:
-    * leaving it unset was measured to split data across batches here
-    * (and cost ~25% more in state commits); the first cut instead
-    * pinned batching with a `coalesce(1)` single-file write, which the
-    * parallel write replaces at equal guarantee (r19 SsjProfile:
-    * render+write is ~0.3 s — the round trip's cost is per-partition
-    * state-store lifecycle, addressed by the scale-adaptive state
-    * partitioning below). A multi-batch regression
-    * cannot pass silently: files are type/ts range-ordered, so a later
-    * batch would see the earlier batch's watermark and drop rows — the
-    * DuckDB hash compare catches exactly that. Scratch/checkpoint/
-    * output dirs are per-(JVM, fixture) deterministic and wiped per run
-    * (bench reps pay the full pipeline each rep — this query prices
-    * the streaming round trip, like q_product_view_pipeline prices the
-    * JSON one). */
+    * Determinism: the read goes through
+    * [[ProductViewPipeline.fileSource]], which is uncapped, so every
+    * data row lands in micro-batch 1, whose epoch watermark can drop
+    * nothing — the inner join's output is exactly the batch range join
+    * at wire (millisecond) timestamp granularity. A multi-batch
+    * regression cannot pass silently: files are type/ts range-ordered,
+    * so a later batch would see the earlier batch's watermark and drop
+    * rows — the DuckDB hash compare catches exactly that.
+    * Scratch/checkpoint/output dirs are per-(JVM, fixture)
+    * deterministic and wiped per run (bench reps pay the full pipeline
+    * each rep — this query prices the streaming round trip, like
+    * q_product_view_pipeline prices the JSON one). */
   val streamStreamJoin = Q(
     "q_stream_stream_join",
     (spark, dir) => {
@@ -196,9 +188,7 @@ object PipelineQueries {
       val stateParts = math.max(2L, math.min(
         (wireBytes + statePartBytes - 1) / statePartBytes, confParts.toLong)).toInt
       val parsed = ProductViewPipeline.parse(
-        spark.readStream.format("text")
-          .option("maxFilesPerTrigger", Int.MaxValue.toString)
-          .load(wireDir))
+        ProductViewPipeline.fileSource(spark, wireDir))
       val joined = graft.streaming.Stateful.viewToPurchaseJoin(
         parsed.filter(col("source") === "view"),
         parsed.filter(col("source") === "purchase"))

@@ -43,16 +43,15 @@ import graft.model.{Money, Q, Tables}
   * What the source implements, and why each matters at 100 TB:
   *  - `SupportsPushDownFilters`: `EqualTo`/`In`/`IsNotNull` on
   *    `event_type` prune partition directories at PLANNING time; `ts`
-  *    range predicates prune whole FILES via per-file min/max ts stats
-  *    read from each surviving dir's write-time sidecar
-  *    ([[WireEvents.writeTsStats]]; sorted-file first/last-line probe
-  *    as the fallback for files no sidecar covers), pushed for pruning
-  *    and kept residual for exact row evaluation; all other predicates
-  *    are returned to Spark as residuals (evaluated post-scan as
-  *    usual). A 100 TB wire dump filtered to one event type and a time
-  *    window reads only that type's bytes within the window's band of
-  *    files — and the PLANNING of that read opens that type's sidecar,
-  *    not the band's files.
+  *    range predicates prune whole FILES via per-file min/max ts read
+  *    from each surviving file's own first and last line (the writer
+  *    sorts every file by ts; [[WireEvents.fileTsRange]]), pushed for
+  *    pruning and kept residual for exact row evaluation; all other
+  *    predicates are returned to Spark as residuals (evaluated
+  *    post-scan as usual). A wire dump filtered to one event type and
+  *    a time window reads only that type's bytes within the window's
+  *    band of files; planning that read opens only that type's files,
+  *    each once per JVM.
   *  - `SupportsPushDownRequiredColumns`: the reader materializes ONLY
   *    the requested fields from each JSON node — a 2-column projection
   *    never allocates the other four (the JSON line is still read;
@@ -124,10 +123,11 @@ private[sources] class WireTable(
     // or time-band pruning must say so here. `eventTypes` (csv) bounds
     // the census to those partition dirs — full subscription
     // semantics, rows of other types never exist. `tsMin`/`tsMax`
-    // ([[WireEvents.TsFmt]] strings) prune whole FILES via the stats
-    // manifest — a BAND hint: rows outside the range inside surviving
-    // files still flow, the query's own row filter stays responsible
-    // (exactly the pushed-plus-residual split of the batch path).
+    // ([[WireEvents.TsFmt]] strings) prune whole FILES via their
+    // first/last-line ts — a BAND hint: rows outside the range inside
+    // surviving files still flow, the query's own row filter stays
+    // responsible (exactly the pushed-plus-residual split of the batch
+    // path).
     // Batch scans may use the same options; query filters then merge.
     // fail-loudly validation: ts bounds prune by LEXICOGRAPHIC compare
     // (sound only for TsFmt-shaped strings), so a malformed bound
@@ -241,7 +241,7 @@ private[sources] class WireScan(
     * that opt in via [[SupportsRuntimeFiltering]]). Two key columns
     * participate: `event_type` prunes whole partition DIRECTORIES, and
     * — r13, the r12 verdict's task 5 — `ts` prunes whole FILES through
-    * the per-dir stats sidecars: a join against a filtered time
+    * their first/last-line ts band: a join against a filtered time
     * dimension arrives as an IN-set of ts keys, and a file survives
     * only if some key falls inside its [min, max] band. So a 100 TB
     * dump joined to one hot hour reads that hour's band of files,
@@ -818,12 +818,10 @@ object WireEvents {
     * first line yields None and disables min-side pruning for the
     * file, which is the conservative direction). [[TsFmt]] is
     * lexicographically ordered, so string compare == time compare.
-    * Since r12 this probe runs (a) cluster-parallel inside the
-    * write-time stats job ([[writeTsStats]]) and (b) on the driver
-    * only as the per-file FALLBACK for files no sidecar covers —
-    * planning under a ts range reads the sidecars, not the candidate
-    * files. A line longer than the window yields None
-    * (unknown), never a wrong bound. */
+    * The file is its own stats store: planning under a ts bound probes
+    * each candidate file on the driver, through [[probeMemo]]. A line
+    * longer than the window yields None (unknown), never a wrong
+    * bound. */
   private[sources] def fileTsRange(
       fs: FileSystem, p: HPath, len: Long): (Option[String], Option[String]) = {
     if (len <= 0) return (None, None)
@@ -855,33 +853,22 @@ object WireEvents {
     } finally in.close()
   }
 
-  /** Per-partition-dir ts-stats sidecar (`event_type=X/_ts_stats.json`,
-    * entries keyed by bare file name; the underscore prefix keeps it
-    * out of the data-file listing, like `_SUCCESS`). The ONE ts-stats
-    * store: one per dir, not one for the layout, so at 100 TB
-    * (millions of files over tens of types) a `type ∧ ts` plan parses
-    * only the surviving dirs' entries, and the commit path rewrites
-    * only the dirs it touched, never one O(total files) global file. */
-  private[sources] val TsStatsSidecar = "_ts_stats.json"
-
-  /** Driver-side memo of fallback probe results keyed (path, length):
-    * files are immutable once visible (the source contract), so a
-    * (path, len) pair determines (min ts, max ts) forever. This exists
-    * for the streaming TAIL under a ts-band subscription: files
-    * appended out-of-band carry no manifest entry, and without the
-    * memo every trigger's census would re-open every uncovered file in
-    * the listing — including long-consumed ones — putting per-trigger
-    * driver I/O back on the O(total files) curve the manifest removed.
-    * Per-entry memory is ~150 B — but the map outlives any one query
-    * or trigger (it is JVM-scoped, shared across layouts), so a
-    * long-lived streaming driver would otherwise accumulate entries
-    * for files consumed months ago: [[probeMemo]] bounds it as an
-    * access-order LRU. An LRU, not a drop-at-cap (ADVICE r13): the
-    * old check-then-clear raced (concurrent callers could overshoot
-    * the cap) and a wholesale clear discarded every LIVE entry at
-    * once, turning the next census into a synchronized re-probe wave
-    * of every uncovered file; evicting only the eldest keeps the hot
-    * tail memoized at all times. */
+  /** Driver-side memo of probe results keyed (path, length): files
+    * are immutable once visible (the source contract), so a (path, len)
+    * pair determines (min ts, max ts) forever. Planning the same read
+    * twice, and every trigger of a streaming census under a ts-band
+    * subscription, then opens no file it already probed — without the
+    * memo each trigger would re-open every file in the listing,
+    * including long-consumed ones. Per-entry memory is ~150 B — but the
+    * map outlives any one query or trigger (it is JVM-scoped, shared
+    * across layouts), so a long-lived streaming driver would otherwise
+    * accumulate entries for files consumed months ago: [[probeMemo]]
+    * bounds it as an access-order LRU. An LRU, not a drop-at-cap (ADVICE
+    * r13): the old check-then-clear raced (concurrent callers could
+    * overshoot the cap) and a wholesale clear discarded every LIVE entry
+    * at once, turning the next census into a synchronized re-probe wave
+    * of every file; evicting only the eldest keeps the hot tail
+    * memoized at all times. */
   private val probeCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(String, Long), (Option[String], Option[String])](
         1024, 0.75f, /* accessOrder = */ true) {
@@ -905,199 +892,22 @@ object WireEvents {
     else { val v = f; probeCache.put(key, v); v }
   }
 
-  /** Read ONE per-dir sidecar: file name -> (file length, min ts,
-    * max ts); None when the sidecar is absent (the caller falls back
-    * to the per-file probe). A malformed sidecar fails
-    * LOUDLY — silently ignoring it would put planning back on the
-    * O(files) probe path with no signal. */
-  private[sources] def readStatsFile(fs: FileSystem, p: HPath)
-      : Option[Map[String, (Long, Option[String], Option[String])]] = {
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    val mapper = new ObjectMapper()
-    Some(lines.filter(_.nonEmpty).map { l =>
-      val n = try mapper.readTree(l) catch {
-        case e: com.fasterxml.jackson.core.JacksonException =>
-          throw new IllegalStateException(
-            s"wire-events: malformed ts-stats manifest line in $p: $l", e)
-      }
-      require(n.has("path") && n.has("len"),
-        s"wire-events: ts-stats manifest entry missing path/len in $p: $l")
-      def optS(k: String): Option[String] = {
-        val v = n.get(k)
-        if (v == null || v.isNull) None else Some(v.asText)
-      }
-      n.get("path").asText -> ((n.get("len").asLong, optS("min"), optS("max")))
-    }.toMap)
-  }
-
-  /** One ts-stats sidecar COMMIT — entries (fileName, len, min, max)
-    * sorted by name, temp-then-rename so a reader never sees a torn
-    * file; the commit replaces whatever sidecar was there. */
-  private[graft] def commitStatsFile(fs: FileSystem, target: HPath,
-      entries: Seq[(String, Long, Option[String], Option[String])]): Unit = {
-    val mapper = new ObjectMapper()
-    val lines = entries.sortBy(_._1).map { case (name, len, mn, mx) =>
-      val n = mapper.createObjectNode()
-      n.put("path", name)
-      n.put("len", len)
-      mn.foreach(n.put("min", _))
-      mx.foreach(n.put("max", _))
-      mapper.writeValueAsString(n)
-    }
-    val tmp = new HPath(target.getParent,
-      s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(target, false)
-    if (!fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"wire-events: failed to commit ts-stats manifest $target")
-    }
-  }
-
-  /** Write-time stats job: per-file (min ts, max ts) for every data
-    * file under `dir`, computed as a DISTRIBUTED job (one task per
-    * bounded first/last-line probe — executors pay the two 64 KB reads
-    * each, in parallel) and published as PER-DIR SIDECARS
-    * (`event_type=X/_ts_stats.json`, r12 verdict task 2). At 100 TB
-    * this is the difference between a ts-windowed
-    * query's PLANNING opening O(candidate-files) streams on the driver
-    * (r11 behavior) — or, r12's shape, parsing one O(total-files) root
-    * file — and parsing only the SURVIVING dirs' O(dir-files) entries:
-    * the probe cost moves to write time, is paid once, runs
-    * cluster-parallel, and amortizes over every later windowed read.
-    * The job is INCREMENTAL: entries already in a dir's sidecar with a
-    * matching length are reused without re-probing, and a dir whose
-    * entry set is unchanged skips its commit rename — an append
-    * touches only the dirs it appended to.
-    *
-    * Each entry carries the file LENGTH as a freshness check — a file
-    * rewritten outside [[writeWire]] (violating immutable-once-visible)
-    * no longer matches and falls back to the direct probe rather than
-    * pruning on stale bounds. Collecting to the driver is sound: the
-    * manifest is O(files), the same order as the listing the driver
-    * already holds — never O(rows). */
-  private[graft] def writeTsStats(spark: SparkSession, dir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new HPath(dir)
-    val fs = root.getFileSystem(conf)
-    val files: Seq[(String, String, Long)] = listDataFiles(fs, root, _ => true)
-      .flatMap { case (dirName, statuses) =>
-        statuses.map(s => (dirName + "/" + s.getPath.getName,
-                           s.getPath.toString, s.getLen))
-      }
-    if (files.isEmpty) return
-    def dirOf(rel: String) = rel.substring(0, rel.indexOf('/'))
-    def nameOf(rel: String) = rel.substring(rel.indexOf('/') + 1)
-    // INCREMENTAL: entries already in a dir's sidecar with a matching
-    // length are reused — an append to one partition dir re-probes only
-    // its new files, not the whole layout (files are immutable once
-    // visible, so (name, len) determines the range forever).
-    // A MALFORMED sidecar is treated as absent HERE (unlike the read
-    // path, which fails loudly): the writer's natural recovery is to
-    // re-probe that dir and rewrite a good sidecar — throwing would
-    // brick every future writeWire/append to the layout on one
-    // corrupted file, with manual deletion the only way out (r13
-    // review finding; the self-heal is spec-pinned).
-    val existing: Map[String, Map[String, (Long, Option[String], Option[String])]] =
-      files.map(f => dirOf(f._1)).distinct.map { dn =>
-        val p = new HPath(new HPath(root, dn), TsStatsSidecar)
-        // catch ONLY the malformed-manifest shapes readStatsFile
-        // throws (IllegalState for bad JSON, IllegalArgument for a
-        // missing field): a transient IO failure on a healthy sidecar
-        // must stay loud, not be misreported as corruption and
-        // silently re-probe the whole dir (r13 review finding)
-        dn -> (try readStatsFile(fs, p).getOrElse(Map.empty) catch {
-          case e @ (_: IllegalStateException | _: IllegalArgumentException) =>
-            System.err.println(s"[wire-events] corrupt sidecar $p — " +
-              s"re-probing the dir and rewriting it: ${e.getMessage}")
-            Map.empty[String, (Long, Option[String], Option[String])]
-        })
-      }.toMap
-    val (covered, toProbe) = files.partition { case (rel, _, len) =>
-      existing(dirOf(rel)).get(nameOf(rel)).exists(_._1 == len)
-    }
-    val ser = new org.apache.spark.util.SerializableConfiguration(conf)
-    val probed =
-      if (toProbe.isEmpty) Array.empty[(String, Long, Option[String], Option[String])]
-      else spark.sparkContext
-        .parallelize(toProbe, math.max(1, math.min(toProbe.size,
-          spark.sparkContext.defaultParallelism)))
-        .map { case (rel, abs, len) =>
-          val p = new HPath(abs)
-          val (mn, mx) = fileTsRange(p.getFileSystem(ser.value), p, len)
-          (rel, len, mn, mx)
-        }
-        .collect()
-    val stats = probed ++ covered.map { case (rel, _, len) =>
-      val (_, mn, mx) = existing(dirOf(rel))(nameOf(rel))
-      (rel, len, mn, mx)
-    }
-    // per-dir sidecars are the PRIMARY store (r12 verdict task 2): a
-    // `type ∧ ts` plan parses only surviving dirs' entries, and an
-    // append commit rewrites only the dirs it touched — a dir whose
-    // entry set is unchanged (nothing probed, nothing removed) skips
-    // its rename entirely
-    val probedDirs = probed.map(p => dirOf(p._1)).toSet
-    stats.groupBy(s => dirOf(s._1))
-      .foreach { case (dirName, entries) =>
-        val names = entries.map(e => nameOf(e._1)).toSet
-        if (probedDirs.contains(dirName) ||
-            existing(dirName).keySet != names) {
-          commitStatsFile(fs, new HPath(new HPath(root, dirName), TsStatsSidecar),
-            entries.toIndexedSeq.map { case (rel, len, mn, mx) =>
-              (nameOf(rel), len, mn, mx)
-            })
-        }
-      }
-  }
-
-  /** The layout's data files grouped by `event_type=` dir name, both in
-    * listing order; empty when `root` does not exist. A data file is a
-    * plain file without a `_`/`.` prefix, so sidecars, `_SUCCESS` and
-    * commit temps never list. `keepDir` prunes a dir by name before its
-    * files are listed. The one listing shared by the stats job and the
-    * planning census. */
-  private def listDataFiles(fs: FileSystem, root: HPath,
-      keepDir: String => Boolean): Seq[(String, Seq[FileStatus])] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("event_type=") &&
-        keepDir(s.getPath.getName))
-      .map { d =>
-        d.getPath.getName -> fs.listStatus(d.getPath).toSeq.filter(s => s.isFile && {
-          val n = s.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        })
-      }
-
   /** Driver-side census of the wire layout with directory pruning
     * applied: (partition value, file path, length) for every data file
-    * in a surviving `event_type=` directory. Shared by the batch scan
+    * in a surviving `event_type=` directory, in listing order; empty
+    * when the root does not exist. A data file is a plain file without a
+    * `_`/`.` prefix, so `_SUCCESS`, commit temps and any other
+    * underscore file never list, nor open. Shared by the batch scan
     * (planning + statistics) and the micro-batch stream (offsets).
     *
-    * When a ts range was pushed, whole files outside the range are
-    * dropped here via the sorted-file min/max stats — a file is pruned
-    * only when it CERTAINLY holds no qualifying row (its min is above
-    * the upper bound or its max below the lower; null-ts rows never
-    * qualify a range predicate under SQL nulls, so their presence in a
-    * pruned file is sound to skip).
-    *
-    * Stats come from each surviving dir's sidecar ([[writeTsStats]])
-    * when present and length-fresh, so PLANNING under a ts range opens
-    * one small file per surviving dir — never the candidate data files
-    * (the r11 audit's O(candidate-files) driver-I/O seam, closed r12;
-    * pinned by WireSourceSpec's counting-filesystem test). A dir with
-    * no sidecar, and files a foreign writer dropped in after the
-    * sidecar was written (no entry / stale length), fall back to the
-    * direct per-file probe ([[fileTsRange]]) — the conservative path,
-    * paid only for the unknown files. */
+    * When a ts bound or key set was pushed, whole files outside it are
+    * dropped here via the sorted-file min/max ([[fileTsRange]] through
+    * [[probeMemo]]) — a file is pruned only when it CERTAINLY holds no
+    * qualifying row (its min is above the upper bound or its max below
+    * the lower; null-ts rows never qualify a range predicate under SQL
+    * nulls, so their presence in a pruned file is sound to skip).
+    * Directory pruning runs first, so an off-type file never opens, and
+    * with no ts filter no file opens at all. */
   private[sources] def listWireFiles(
       path: String, pushed: Array[Filter]): Seq[(String, String, Long)] = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
@@ -1107,37 +917,33 @@ object WireEvents {
       val raw = dirName.stripPrefix("event_type=")
       if (raw == "__HIVE_DEFAULT_PARTITION__") null else unescapePathName(raw)
     }
-    val dirs = listDataFiles(fs, root, dn => survives(valueOf(dn), pushed))
-    def rows(dirName: String, files: Seq[FileStatus]) = {
-      val v = valueOf(dirName)
-      files.map(s => (v, s.getPath.toString, s.getLen))
-    }
     val (lo, hi) = tsBounds(pushed)
     val inSet = tsInSet(pushed)
-    if (lo.isEmpty && hi.isEmpty && inSet.isEmpty)
-      dirs.flatMap { case (dirName, files) => rows(dirName, files) }
-    else dirs.sortBy(_._1).flatMap { case (dirName, files) =>
-      // a sidecar is authoritative for its dir: an uncovered/stale
-      // entry there, or no sidecar at all, goes to the per-file probe.
-      // Lazy: a dir with no data files never opens its sidecar.
-      lazy val sidecar =
-        readStatsFile(fs, new HPath(new HPath(root, dirName), TsStatsSidecar))
-      rows(dirName, files.filter { s =>
-        val (p, len) = (s.getPath.toString, s.getLen)
-        def probe = probeMemo((p, len))(fileTsRange(fs, s.getPath, len))
-        val (mn, mx) = sidecar.flatMap(_.get(s.getPath.getName)) match {
-          case Some((mLen, mMin, mMax)) if mLen == len => (mMin, mMax)
-          case _ => probe
-        }
-        val entirelyAbove = hi.exists(h => mn.exists(_ > h))
-        val entirelyBelow = lo.exists(l => mx.exists(_ < l))
-        // DPP key set: the file must hold SOME key in its band
-        // (unknown min/max stay conservative — treated unbounded)
-        val missesKeys = inSet.exists(ks => !ks.exists(k =>
-          mn.forall(_ <= k) && mx.forall(_ >= k)))
-        !(entirelyAbove || entirelyBelow || missesKeys)
-      })
+    val ranged = lo.nonEmpty || hi.nonEmpty || inSet.nonEmpty
+    def inBand(s: FileStatus): Boolean = {
+      val len = s.getLen
+      val (mn, mx) = probeMemo((s.getPath.toString, len))(fileTsRange(fs, s.getPath, len))
+      val entirelyAbove = hi.exists(h => mn.exists(_ > h))
+      val entirelyBelow = lo.exists(l => mx.exists(_ < l))
+      // DPP key set: the file must hold SOME key in its band
+      // (unknown min/max stay conservative — treated unbounded)
+      val missesKeys = inSet.exists(ks => !ks.exists(k =>
+        mn.forall(_ <= k) && mx.forall(_ >= k)))
+      !(entirelyAbove || entirelyBelow || missesKeys)
     }
+    if (!fs.exists(root)) return Seq.empty
+    fs.listStatus(root).toSeq
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith("event_type="))
+      .flatMap { d =>
+        val v = valueOf(d.getPath.getName)
+        if (!survives(v, pushed)) Seq.empty
+        else fs.listStatus(d.getPath).toSeq
+          .filter { s =>
+            val n = s.getPath.getName
+            s.isFile && !n.startsWith("_") && !n.startsWith(".") && (!ranged || inBand(s))
+          }
+          .map(s => (v, s.getPath.toString, s.getLen))
+      }
   }
 
   /** Byte-range split planning over listed files; the last split of a
@@ -1223,16 +1029,9 @@ object WireEvents {
     * (observed: 5 files total at sf0.001 under AQE). Default = the
     * session's shuffle parallelism.
     *
-    * After the data lands, [[writeTsStats]] publishes the per-file
-    * (min ts, max ts) manifest the reader prunes from — write-time
-    * cluster-parallel stats so a later ts-windowed read's planning
-    * never opens data files (r12). */
-  def writeWire(events: DataFrame, dir: String, timeBands: Int = 0): Unit = {
-    writeWireData(events, dir, timeBands)
-    writeTsStats(events.sparkSession, dir)
-  }
-
-  private def writeWireData(events: DataFrame, dir: String, timeBands: Int): Unit =
+    * Nothing but the data and Spark's `_SUCCESS` marker is written:
+    * the sorted files are their own ts stats ([[fileTsRange]]). */
+  def writeWire(events: DataFrame, dir: String, timeBands: Int = 0): Unit =
     events
       .repartitionByRange(
         if (timeBands > 0) timeBands

@@ -66,10 +66,6 @@ class SourceAuditSpec extends AnyFunSuite {
           "r15 — was decontaminate_bloom's): LIMIT evalSetCap+1 ships " +
           "at most cap+1 longs, then falls back to the distributed " +
           "semi-join"),
-      "sources/WireEvents.scala" -> (1,
-        "writeTsStats manifest collect: one ~100 B (path, len, min, max) " +
-          "tuple per FILE — O(files), the same order as the listing the " +
-          "driver already holds for planning; never O(rows)"),
       "streaming/ProductViewPipeline.scala" -> (1,
         "sortedBatchQuery's driver-side sort: one update row per " +
           "(source, window) the micro-batch touched — never O(events); " +

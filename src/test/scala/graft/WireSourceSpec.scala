@@ -636,165 +636,80 @@ class WireSourceSpec extends SparkSpec {
       "no row may re-emit from a torn census log before the refusal")
   }
 
-  test("ts-range planning opens only surviving dirs' stats sidecars, never data files (100 TB driver-I/O bound)") {
-    // r11's audit found planning-time driver I/O proportional to the
-    // candidate file count (per-file first/last-line probes). r12 moved
-    // the probe into a write-time cluster job publishing one root
-    // manifest — itself O(total files) per parse; r13 shards it into
-    // per-dir sidecars. This test pins the r13 bound via a counting
-    // filesystem: a ts-ranged plan may open surviving dirs' sidecars
-    // and nothing else; a `type ∧ ts` plan opens ONLY the surviving
-    // type's sidecar — not other dirs', and never a data file.
+  test("a type-and-ts plan opens only the surviving dir's data files, and planning it again opens none") {
+    // The sorted files are the only ts stats: planning under a ts bound
+    // probes each candidate file's first/last line. This pins the
+    // driver-I/O bound via a counting filesystem: directory pruning
+    // runs first, so a `type ∧ ts` plan opens only the surviving type's
+    // data files (no other dir's, no underscore file), and the (path,
+    // length) memo makes a second plan of the same read open nothing.
     spark.sparkContext.hadoopConfiguration
       .set("fs.cntfs.impl", classOf[CountingLocalFs].getName)
     val cut = events.selectExpr(
       s"date_format(percentile_approx(ts, 0.5), '${WireEvents.TsFmt}')")
       .collect()(0).getString(0)
     import scala.jdk.CollectionConverters._
-    def dataOpensOf(opened: List[String]) = opened.filter(p =>
-      p.contains("/event_type=") && !p.endsWith("/_ts_stats.json"))
+    def planTyped(): String = WireEvents.read(spark, "cntfs:" + wireDir)
+      .filter(col("event_type") === "click" && col("ts") >= cut)
+      .queryExecution.executedPlan.toString
     CountingLocalFs.opened.clear()
+    planTyped()
+    val typedOpens = CountingLocalFs.opened.asScala.toList
+    assert(typedOpens.nonEmpty &&
+      typedOpens.forall(p => p.contains("/event_type=click/part-")),
+      s"a type ∧ ts plan must open only the surviving dir's data files; " +
+        s"opened: $typedOpens")
+    CountingLocalFs.opened.clear()
+    planTyped()
+    assert(CountingLocalFs.opened.isEmpty,
+      s"a second plan of the same read must hit the probe memo; " +
+        s"opened: ${CountingLocalFs.opened.asScala.toList}")
+    // the probe still prunes, and rows stay exact
     val ranged = WireEvents.read(spark, "cntfs:" + wireDir)
       .filter(col("ts") >= cut)
-    val plan = ranged.queryExecution.executedPlan.toString // forces listing + pruning
-    val openedAtPlanning = CountingLocalFs.opened.asScala.toList
-    assert(dataOpensOf(openedAtPlanning).isEmpty,
-      s"ts-range planning must not open data files; opened: ${dataOpensOf(openedAtPlanning)}")
-    assert(openedAtPlanning.count(_.endsWith("/_ts_stats.json")) >= 1,
-      s"planning should read the per-dir sidecars; opened: $openedAtPlanning")
-    // type ∧ ts: only the surviving dir's sidecar is parsed
-    CountingLocalFs.opened.clear()
-    val typed = WireEvents.read(spark, "cntfs:" + wireDir)
-      .filter(col("event_type") === "click" && col("ts") >= cut)
-    typed.queryExecution.executedPlan.toString
-    val typedOpens = CountingLocalFs.opened.asScala.toList
-    val sidecarOpens = typedOpens.filter(_.endsWith("/_ts_stats.json"))
-    assert(sidecarOpens.nonEmpty &&
-      sidecarOpens.forall(_.contains("/event_type=click/")),
-      s"a type ∧ ts plan must parse only the surviving dir's sidecar; " +
-        s"opened: $typedOpens")
-    assert(dataOpensOf(typedOpens).isEmpty,
-      s"type ∧ ts planning opened beyond the one sidecar: $typedOpens")
-    // the sidecar-backed pruning still prunes, and rows stay exact
-
     val allPlan = WireEvents.read(spark, "cntfs:" + wireDir)
       .queryExecution.executedPlan.toString
-    assert(filesOf(plan) < filesOf(allPlan),
-      s"manifest pruning must drop files (${filesOf(plan)} vs ${filesOf(allPlan)})")
+    assert(filesOf(ranged) < filesOf(allPlan),
+      s"probe pruning must drop files (${filesOf(ranged)} vs ${filesOf(allPlan)})")
     assert(ranged.count() ===
       events.filter(date_format(col("ts"), WireEvents.TsFmt) >= cut).count())
   }
 
   test("a file the manifest does not cover falls back to the direct probe, never a wrong prune") {
-    // a foreign writer drops a file in AFTER the manifest was written:
-    // no manifest entry -> the conservative per-file probe decides, so
-    // an out-of-band file holding qualifying rows must survive pruning
+    // a foreign writer drops files in after writeWire: each is probed
+    // from its own first/last line like any other, so an out-of-band
+    // file holding qualifying rows must survive pruning
     val d = tmp()
     val half = events.filter(col("event_id") < 500)
     WireEvents.writeWire(half, d)
     val cut = events.selectExpr(
       s"date_format(percentile_approx(ts, 0.5), '${WireEvents.TsFmt}')")
       .collect()(0).getString(0)
-    // append the other half out-of-band (copies files, leaves the
-    // manifest untouched — exactly the stale-manifest scenario)
+    // append the other half out-of-band (copies files in without
+    // writeWire)
     appendWire(events.filter(col("event_id") >= 500), d)
     val ranged = WireEvents.read(spark, d).filter(col("ts") >= cut)
     assert(ranged.count() ===
       events.filter(date_format(col("ts"), WireEvents.TsFmt) >= cut).count(),
-      "manifest-missing files must be probed, not mis-pruned")
+      "out-of-band files must be probed, not mis-pruned")
   }
 
-  test("a corrupt ts-stats sidecar fails loudly, never silently degrades to the probe path") {
+  test("writeWire writes only data files and _SUCCESS; the per-file probe prunes partially and exactly") {
+    // the sorted files are the only ts stats: the writer publishes no
+    // other file, and a ranged read prunes from the first/last-line
+    // probe of each file
     val d = tmp()
-    WireEvents.writeWire(events.filter(col("event_id") < 200), d)
-    val cut = events.selectExpr(
-      s"date_format(percentile_approx(ts, 0.5), '${WireEvents.TsFmt}')")
-      .collect()(0).getString(0)
-    def planRanged(): Unit = {
-      WireEvents.read(spark, d).filter(col("ts") >= cut)
-        .queryExecution.executedPlan.toString
-      ()
-    }
-    def loudMsgs(body: => Unit): String = {
-      val e = intercept[Exception](body)
-      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-        .map(m => Option(m.getMessage).getOrElse("")).mkString(" | ")
-    }
-    // corrupt ONE dir's sidecar: a ts plan that survives that dir
-    // must fail loudly, not fall back to probing
-    val clickDir = Paths.get(d, "event_type=click")
-    Files.writeString(clickDir.resolve("_ts_stats.json"), "{not json\n")
-    Files.deleteIfExists(clickDir.resolve("._ts_stats.json.crc"))
-    assert(loudMsgs(planRanged()).contains("malformed ts-stats manifest"))
-    // without a ts predicate no stats file is ever read: scan unaffected
-    assert(WireEvents.read(spark, d).count() ===
-      events.filter(col("event_id") < 200).count())
-  }
-
-  test("the stats job is incremental: unchanged dirs skip their commit, appended dirs re-probe only new files") {
-    val d = tmp()
-    WireEvents.writeWire(events.filter(col("event_id") < 300), d)
+    val written = events.filter(col("event_id") < 200)
+    WireEvents.writeWire(written, d)
     import scala.jdk.CollectionConverters._
-    def sidecarMtimes(): Map[String, java.nio.file.attribute.FileTime] =
-      Files.list(Paths.get(d)).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("event_type="))
-        .map(dir => dir.getFileName.toString ->
-          Files.getLastModifiedTime(dir.resolve("_ts_stats.json")))
-        .toMap
-    val before = sidecarMtimes()
-    assert(before.nonEmpty)
-    Thread.sleep(200)
-    // no-op rerun: every entry covered and fresh -> zero sidecar commits
-    WireEvents.writeTsStats(spark, d)
-    assert(sidecarMtimes() === before,
-      "an unchanged dir must skip its sidecar rename entirely")
-    // out-of-band append to ONE dir: only that dir's sidecar rewrites
-    val clickDir = Paths.get(d, "event_type=click")
-    val src = Files.list(clickDir).filter(p =>
-      p.getFileName.toString.startsWith("part-")).findFirst().get()
-    Files.copy(src, clickDir.resolve("part-zz-incr.txt"))
-    Thread.sleep(200)
-    WireEvents.writeTsStats(spark, d)
-    val after = sidecarMtimes()
-    assert(after("event_type=click") != before("event_type=click"),
-      "the appended dir must rewrite its sidecar")
-    assert((after - "event_type=click") === (before - "event_type=click"),
-      "dirs without new files must keep their sidecars untouched")
-    // the refreshed sidecar still prunes exactly
-    val cut = events.selectExpr(
-      s"date_format(percentile_approx(ts, 0.5), '${WireEvents.TsFmt}')")
-      .collect()(0).getString(0)
-    val expected = events.filter(col("event_id") < 300)
-      .filter(date_format(col("ts"), WireEvents.TsFmt) >= cut).count() +
-      spark.read.text(clickDir.resolve("part-zz-incr.txt").toString)
-        .selectExpr("get_json_object(value, '$.ts') AS ts")
-        .filter(col("ts") >= cut).count()
-    assert(WireEvents.read(spark, d).filter(col("ts") >= cut).count() === expected)
-    // the retired r12 root manifest is never written (its rewrite was
-    // the last O(total-files) serialization on the commit path)
-    assert(!Files.exists(Paths.get(d, "_wire_ts_stats.json")),
-      "the stats commit path must not write a root manifest")
-  }
-
-  test("a layout with no sidecars prunes through the per-file probe") {
-    // a sidecar is the only stats store: a dir without one (a layout
-    // copied without its underscore files, a lost commit) must still
-    // prune, from the conservative first/last-line probe of each file
-    val d = tmp()
-    WireEvents.writeWire(events.filter(col("event_id") < 200), d)
-    def sidecars(): Seq[java.io.File] = new java.io.File(d).listFiles()
-      .filter(_.getName.startsWith("event_type="))
-      .map(new java.io.File(_, "_ts_stats.json")).filter(_.exists).toSeq
-    assert(sidecars().nonEmpty, "writeWire must have written sidecars")
-    sidecars().foreach { f =>
-      Files.delete(f.toPath)
-      Files.deleteIfExists(f.toPath.resolveSibling("._ts_stats.json.crc"))
-    }
+    val underscored = Files.walk(Paths.get(d)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("_")).toList
+    assert(underscored === List("_SUCCESS"),
+      s"writeWire wrote underscore files beyond _SUCCESS: $underscored")
     // the cut must come from the WRITTEN SUBSET's distribution: the
     // global median sits above every subset ts, which would prune ALL
     // files and make both assertions below vacuous (0 < N and 0 === 0
     // pass even with pruning broken — review finding)
-    val written = events.filter(col("event_id") < 200)
     val cut = written.selectExpr(
       s"date_format(percentile_approx(ts, 0.5), '${WireEvents.TsFmt}')")
       .collect()(0).getString(0)
@@ -808,8 +723,39 @@ class WireSourceSpec extends SparkSpec {
     assert(nRanged > 0 && nRanged < nAll,
       s"the per-file probe must prune PARTIALLY ($nRanged of $nAll)")
     assert(ranged.count() === expected)
-    // reading never writes stats: the layout stays sidecar-less
-    assert(sidecars().isEmpty, s"a ranged read minted sidecars: ${sidecars()}")
+  }
+
+  test("a stale ts-stats sidecar left by an older writer is never read") {
+    // older writers published per-dir `_ts_stats.json` files; an
+    // underscore file is not a data file, so the reader must neither
+    // open nor trust one. Plant a length-fresh sidecar whose bounds
+    // claim every click file lies above the cut: trusting it would
+    // prune every click file from a `ts < cut` read.
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cntfs.impl", classOf[CountingLocalFs].getName)
+    val d = tmp()
+    val written = events.filter(col("event_id") < 300)
+    WireEvents.writeWire(written, d)
+    val cut = written.selectExpr(
+      s"date_format(percentile_approx(ts, 0.5), '${WireEvents.TsFmt}')")
+      .collect()(0).getString(0)
+    val below = date_format(col("ts"), WireEvents.TsFmt) < cut
+    assert(written.filter(col("event_type") === "click" && below).count() > 0,
+      "click must hold rows below the cut or the test is vacuous")
+    import scala.jdk.CollectionConverters._
+    val clickDir = Paths.get(d, "event_type=click")
+    val stale = Files.list(clickDir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .map(f => s"""{"path":"${f.getFileName}","len":${Files.size(f)},""" +
+        """"min":"9999-01-01 00:00:00.000000","max":"9999-12-31 00:00:00.000000"}""")
+      .toList
+    assert(stale.nonEmpty)
+    Files.writeString(clickDir.resolve("_ts_stats.json"), stale.mkString("", "\n", "\n"))
+    CountingLocalFs.opened.clear()
+    assert(WireEvents.read(spark, "cntfs:" + d).filter(col("ts") < cut).count() ===
+      written.filter(below).count())
+    val sidecarOpens = CountingLocalFs.opened.asScala.filter(_.endsWith("/_ts_stats.json"))
+    assert(sidecarOpens.isEmpty, s"the reader opened a sidecar: $sidecarOpens")
   }
 
   test("a crash between append's delta and snapshot writes does not brick the log (walk-back + self-heal)") {
@@ -850,25 +796,6 @@ class WireSourceSpec extends SparkSpec {
     assert(e.getMessage.contains("unrecoverable"), e.getMessage)
   }
 
-  test("a stats commit replaces the existing sidecar and leaves no temp file") {
-    val d = tmp()
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(d)
-    val fs = root.getFileSystem(conf)
-    val target = new org.apache.hadoop.fs.Path(root, "_ts_stats.json")
-    WireEvents.commitStatsFile(fs, target,
-      Seq(("older.txt", 10L, Some("a"), Some("b"))))
-    WireEvents.commitStatsFile(fs, target,
-      Seq(("newer.txt", 7L, None, None)))
-    val body = Files.readString(Paths.get(d, "_ts_stats.json"))
-    assert(body.contains("newer.txt") && !body.contains("older.txt"), body)
-    // checksummed LocalFS also writes .crc shadows, so count .tmp
-    // files, not name matches
-    assert(new java.io.File(d).listFiles().map(_.getName)
-        .count(_.endsWith(".tmp")) === 0,
-      "the commit leaked its temp file")
-  }
-
   test("the probe memo is a bounded LRU: eldest evicts, the hot tail stays memoized") {
     // the memo is JVM-scoped and outlives every query/trigger; a
     // long-lived streaming driver under continuous out-of-band
@@ -899,27 +826,6 @@ class WireSourceSpec extends SparkSpec {
     assert(computes === -1,
       "p0 (the eldest) should have been evicted at the cap — " +
         "an unbounded map would still hold it")
-  }
-
-  test("a corrupt sidecar self-heals on the WRITE path: the stats job re-probes and rewrites it") {
-    // the READ path fails loudly on a malformed sidecar (previous
-    // test); the WRITE path must instead treat it as absent and
-    // rewrite a good one — otherwise one corrupted file bricks every
-    // future writeWire/append to the layout with no recovery short of
-    // manual deletion
-    val d = tmp()
-    WireEvents.writeWire(events.filter(col("event_id") < 200), d)
-    val clickDir = Paths.get(d, "event_type=click")
-    Files.writeString(clickDir.resolve("_ts_stats.json"), "{not json\n")
-    Files.deleteIfExists(clickDir.resolve("._ts_stats.json.crc"))
-    WireEvents.writeTsStats(spark, d) // must not throw
-    // the sidecar is good again: a ts-ranged plan succeeds and is exact
-    val cut = events.selectExpr(
-      s"date_format(percentile_approx(ts, 0.5), '${WireEvents.TsFmt}')")
-      .collect()(0).getString(0)
-    assert(WireEvents.read(spark, d).filter(col("ts") >= cut).count() ===
-      events.filter(col("event_id") < 200)
-        .filter(date_format(col("ts"), WireEvents.TsFmt) >= cut).count())
   }
 
   test("a static ts equality predicate prunes file bands, not just DPP runtime filters") {
@@ -959,8 +865,8 @@ class WireSourceSpec extends SparkSpec {
     // Spark's micro-batch planner runs no DSv2 filter pushdown (a
     // streaming .filter is post-scan — r11's scaladoc overclaimed
     // this; probed and corrected r12), so subscriptions are OPTIONS,
-    // the Kafka model. tsMin prunes whole files via the stats
-    // manifest; eventTypes bounds the census to the named dirs.
+    // the Kafka model. tsMin prunes whole files via their first/last
+    // line ts; eventTypes bounds the census to the named dirs.
     val d = tmp()
     WireEvents.writeWire(events, d)
     val nFiles = Files.walk(Paths.get(d))
@@ -1041,11 +947,11 @@ class WireSourceSpec extends SparkSpec {
       .contains("empty subscription band"), swapped.getMessage)
   }
 
-  test("streaming ts-band census reads only the subscription's sidecars (sharded stats on the stream path)") {
+  test("a type-and-ts stream subscription opens only the subscribed dir's files") {
     // the batch counting-FS test pins planning; this pins the STREAM:
     // a type ∧ ts subscription's census (every trigger's listing +
-    // admission) must read only the subscribed dir's sidecar — never
-    // other dirs' sidecars or off-type data files
+    // admission) and its reads open only the subscribed dir's data
+    // files — never an off-type file or an underscore file
     spark.sparkContext.hadoopConfiguration
       .set("fs.cntfs.impl", classOf[CountingLocalFs].getName)
     val d = tmp()
@@ -1069,15 +975,11 @@ class WireSourceSpec extends SparkSpec {
     q.awaitTermination()
     assert(total === events.filter(col("event_type") === "click")
       .filter(date_format(col("ts"), WireEvents.TsFmt) >= cut).count())
-    val opened = CountingLocalFs.opened.asScala.toList
-    val statsOpens = opened.filter(_.endsWith("/_ts_stats.json"))
-    assert(statsOpens.nonEmpty &&
-      statsOpens.forall(_.contains("/event_type=click/")),
-      s"stream census must read only the subscribed dir's sidecar: $statsOpens")
-    val dataOpens = opened.filter(p =>
-      p.contains("/event_type=") && !p.endsWith("/_ts_stats.json"))
-    assert(dataOpens.nonEmpty && dataOpens.forall(_.contains("/event_type=click/")),
-      s"off-type data files must never open: $dataOpens")
+    val dataOpens = CountingLocalFs.opened.asScala.toList
+      .filter(_.contains("/event_type="))
+    assert(dataOpens.nonEmpty &&
+      dataOpens.forall(_.contains("/event_type=click/part-")),
+      s"only the subscribed dir's data files may open: $dataOpens")
   }
 
   test("runtime filtering prunes partition dirs at execution time (DSv2 dynamic partition pruning)") {
@@ -1262,13 +1164,11 @@ class WireSourceSpec extends SparkSpec {
       "post-heal retention must re-bound the log on the next committed run")
   }
 
-  test("kill-and-restart with a lost sidecar: the dir falls back to the probe, band stays exactly-once") {
+  test("kill-and-restart with a new in-band file: the probe admits it, band stays exactly-once") {
     // r16 verdict task 7, second leg: the ts-banded stream under a
-    // hostile restart. Run 1 plans from the sidecars; the crash loses
-    // ONE dir's sidecar (deleted here), and a new in-band file lands in
-    // that dir while down — so the dir's every file, old and new, now
-    // has stats from the direct probe only. The restart must admit
-    // exactly the new file's rows and re-emit nothing already
+    // hostile restart. A new in-band file lands in one dir while the
+    // query is down; the restart's census probes it like every other
+    // file and must admit exactly its rows and re-emit nothing already
     // committed.
     val d = tmp()
     val written = events.filter(col("event_id") < 300)
@@ -1294,12 +1194,8 @@ class WireSourceSpec extends SparkSpec {
     }
     run()
     assert(total === inBand, "run 1 must deliver exactly the in-band rows")
-    // the hostile window: the sidecar is lost, and a new in-band file
-    // (covered by NO stats anywhere) lands while the query is down
-    val clickSide = Paths.get(d, "event_type=click", "_ts_stats.json")
-    assert(Files.exists(clickSide), "writeWire must have written the sidecar")
-    Files.delete(clickSide)
-    Files.deleteIfExists(Paths.get(d, "event_type=click", "._ts_stats.json.crc"))
+    // the hostile window: a new in-band file lands while the query is
+    // down
     val maxTs = written.selectExpr(
       s"date_format(max(ts), '${WireEvents.TsFmt}')").collect()(0).getString(0)
     Files.writeString(Paths.get(d, "event_type=click", "part-zz-hostile.txt"),
