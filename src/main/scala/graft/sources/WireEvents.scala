@@ -8,14 +8,12 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
@@ -72,6 +70,11 @@ import graft.model.{Money, Q, Tables}
   *    opt-in for DSv2 sources; spec-pinned end-to-end with a
   *    `dynamicpruning` subquery in the executed plan).
   *
+  * Batch only: the pipeline's streams read through Spark's own file
+  * and Kafka sources ([[graft.streaming.ProductViewPipeline.fileSource]],
+  * [[graft.streaming.ProductViewPipeline.kafkaSource]]), which keep
+  * their own offset logs and exactly-once replay.
+  *
   * Failure contract: a malformed line THROWS with file + byte offset
   * (fail-loudly, spec-pinned). Wire-level dead-lettering is the
   * pipeline's job ([[graft.streaming.ProductViewPipeline.deadLetterQuery]]);
@@ -105,8 +108,7 @@ private[sources] class WireTable(
   override def name(): String = "wire_events"
   override def schema(): StructType = schema
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-                         TableCapability.MICRO_BATCH_READ)
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
   // scan-time options win over table properties (a reader can narrow
   // maxSplitBytes on a catalog table without re-creating it)
   private def opt(options: CaseInsensitiveStringMap, key: String): Option[String] =
@@ -116,100 +118,39 @@ private[sources] class WireTable(
         case (k, v) if k.equalsIgnoreCase(key) => v
       }
     }
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // Subscription OPTIONS (the Kafka model: what to consume is an
-    // option, not a filter): Spark's micro-batch planner never runs
-    // DSv2 filter pushdown, so a STREAMING reader that wants partition
-    // or time-band pruning must say so here. `eventTypes` (csv) bounds
-    // the census to those partition dirs — full subscription
-    // semantics, rows of other types never exist. `tsMin`/`tsMax`
-    // ([[WireEvents.TsFmt]] strings) prune whole FILES via their
-    // first/last-line ts — a BAND hint: rows outside the range inside
-    // surviving files still flow, the query's own row filter stays
-    // responsible (exactly the pushed-plus-residual split of the batch
-    // path).
-    // Batch scans may use the same options; query filters then merge.
-    // fail-loudly validation: ts bounds prune by LEXICOGRAPHIC compare
-    // (sound only for TsFmt-shaped strings), so a malformed bound
-    // would silently prune everything ("garbage" > any timestamp) —
-    // the worst failure mode a subscription option can have
-    def tsOpt(key: String): Option[String] = opt(options, key).map { v =>
-      try {
-        java.time.LocalDateTime.parse(v,
-          java.time.format.DateTimeFormatter.ofPattern(WireEvents.TsFmt))
-      } catch {
-        case e: java.time.format.DateTimeParseException =>
-          throw new IllegalArgumentException(
-            s"wire-events: '$key' must be a '${WireEvents.TsFmt}' timestamp, got '$v'", e)
-      }
-      v
-    }
-    val eventTypes = opt(options, "eventTypes").map { s =>
-      val vs = s.split(",").map(_.trim)
-      require(vs.nonEmpty && vs.forall(_.nonEmpty),
-        s"wire-events: 'eventTypes' must be a non-empty csv of types, got '$s'")
-      vs
-    }
-    val tsMin = tsOpt("tsMin"); val tsMax = tsOpt("tsMax")
-    for (l <- tsMin; h <- tsMax) require(l <= h,
-      s"wire-events: tsMin '$l' > tsMax '$h' — an empty subscription band " +
-        "(swapped bounds?) would silently deliver nothing forever")
-    val subscription: Array[Filter] = Array(
-      eventTypes.map(vs => In("event_type", vs.map(v => v: Any))),
-      tsMin.map(v => GreaterThanOrEqual("ts", v)),
-      tsMax.map(v => LessThanOrEqual("ts", v))).flatten
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new WireScanBuilder(
       opt(options, "path").getOrElse(
         throw new IllegalArgumentException("wire-events: 'path' option is required")),
       opt(options, "maxSplitBytes").map(_.toLong)
-        .getOrElse(WireEvents.DefaultMaxSplitBytes),
-      opt(options, "maxFilesPerTrigger").map(_.toInt),
-      subscription)
-  }
+        .getOrElse(WireEvents.DefaultMaxSplitBytes))
 }
 
-private[sources] class WireScanBuilder(
-    path: String, maxSplitBytes: Long, maxFilesPerTrigger: Option[Int] = None,
-    subscription: Array[Filter] = Array.empty)
+private[sources] class WireScanBuilder(path: String, maxSplitBytes: Long)
     extends ScanBuilder
     with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
-  private var pushed: Array[Filter] = subscription
+  private var pushed: Array[Filter] = Array.empty
   private var required: StructType = WireEvents.wireSchema
 
   /** Accept (fully handle) only predicates the DIRECTORY layout can
     * answer exactly; everything else goes back to Spark.
     *
-    * `ts` range predicates are pushed as well — but for FILE pruning
-    * only (the writer's sorted-file contract makes first/last line =
+    * `ts` predicates are pushed as well — but for FILE pruning only
+    * (the writer's sorted-file contract makes first/last line =
     * min/max, see [[WireEvents.fileTsRange]]), so they are ALSO
     * returned as residual: file-level min/max is coarse, Spark keeps
     * exact row-level evaluation. Same pushed-and-re-evaluated split
     * Spark's parquet source reports for row-group stats filters. The
     * reference's workload filters by time before anything else
     * (windowed counts), so a 100 TB wire dump queried for one window
-    * opens only that window's band of files. */
+    * opens only that window's band of files. Which predicate prunes by
+    * which column is [[WireEvents.prunedBy]]'s one rule. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (handled, residual) = filters.partition {
-      case EqualTo("event_type", _: String) => true
-      case In("event_type", vs) => vs.forall(v => v == null || v.isInstanceOf[String])
-      case IsNotNull("event_type") => true
-      case _ => false
-    }
-    val tsRange = residual.filter {
-      case GreaterThan("ts", _: String) => true
-      case GreaterThanOrEqual("ts", _: String) => true
-      case LessThan("ts", _: String) => true
-      case LessThanOrEqual("ts", _: String) => true
-      // equality/IN prune file bands too (tsInSet — r13 review
-      // finding: only the DPP runtime path engaged it; a plain
-      // WHERE ts = 'X' read every file); kept residual like ranges
-      case EqualTo("ts", _: String) => true
-      case In("ts", vs) => vs.forall(v => v == null || v.isInstanceOf[String])
-      case _ => false
-    }
-    pushed = subscription ++ handled ++ tsRange
+    val (handled, residual) =
+      filters.partition(WireEvents.prunedBy(_).contains("event_type"))
+    pushed = handled ++ residual.filter(WireEvents.prunedBy(_).contains("ts"))
     residual
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -218,15 +159,14 @@ private[sources] class WireScanBuilder(
     required = requiredSchema
 
   override def build(): Scan =
-    new WireScan(path, maxSplitBytes, pushed, required, maxFilesPerTrigger)
+    new WireScan(path, maxSplitBytes, pushed, required)
 }
 
 private[sources] class WireScan(
     path: String,
     maxSplitBytes: Long,
     pushed: Array[Filter],
-    required: StructType,
-    maxFilesPerTrigger: Option[Int] = None)
+    required: StructType)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
@@ -246,8 +186,10 @@ private[sources] class WireScan(
     * only if some key falls inside its [min, max] band. So a 100 TB
     * dump joined to one hot hour reads that hour's band of files,
     * decided at EXECUTION time from the dimension's actual keys.
-    * Filters on any other column are ignored — runtime filters are an
-    * optimization, the join itself still evaluates exactly. */
+    * The same rule as planning decides what prunes
+    * ([[WireEvents.prunedBy]]); filters on any other column are
+    * ignored — runtime filters are an optimization, the join itself
+    * still evaluates exactly. */
   @volatile private var runtimeFilters: Array[Filter] = Array.empty
 
   // only attributes present in the PRUNED read schema — Spark resolves
@@ -260,14 +202,7 @@ private[sources] class WireScan(
       .toArray
 
   override def filter(filters: Array[Filter]): Unit = {
-    runtimeFilters = filters.filter {
-      case EqualTo("event_type", _: String) => true
-      case In("event_type", vs) => vs.forall(v => v == null || v.isInstanceOf[String])
-      case IsNotNull("event_type") => true
-      case EqualTo("ts", _: String) => true
-      case In("ts", vs) => vs.forall(v => v == null || v.isInstanceOf[String])
-      case _ => false
-    }
+    runtimeFilters = filters.filter(WireEvents.prunedBy(_).nonEmpty)
     filesCache = null // re-list under the tightened filter set
   }
 
@@ -289,10 +224,6 @@ private[sources] class WireScan(
   override def createReaderFactory(): PartitionReaderFactory =
     new WireReaderFactory(required.fields.map(_.name))
 
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new WireMicroBatchStream(path, maxSplitBytes, pushed, required,
-      checkpointLocation, maxFilesPerTrigger)
-
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong =
       OptionalLong.of(files.map(_._3).sum)
@@ -308,325 +239,19 @@ private[sources] class WireScan(
       s"cols=[${required.fields.map(_.name).mkString(", ")}]"
 }
 
-/** Streaming micro-batch read over a GROWING wire directory — the
-  * reference's NiFi GetFile tail re-expressed as a native Spark
-  * streaming source. New files appearing under the partition
-  * directories become the next micro-batch; files are required to be
-  * IMMUTABLE once visible (the writer's rename-into-place contract —
-  * Spark's own FileStreamSource makes the same assumption).
-  *
-  * Offsets are O(1) LOG INDICES, not file lists (r11; the same
-  * design Spark's FileStreamSource uses): the source keeps its own
-  * append-only file-census log under the query checkpoint
-  * ([[WireFileLog]], `<checkpoint>/wire-file-log/`), one delta entry
-  * per micro-batch naming exactly that batch's new files, plus a
-  * consolidated snapshot every [[WireFileLog.CompactInterval]] entries
-  * so computing "everything consumed so far" reads one snapshot + a
-  * bounded tail of deltas — never the full history. The engine's
-  * offset log then carries only `{"idx":N}` per batch. The earlier
-  * design carried the ENTIRE sorted consumed-file census in every
-  * offset: at a 100 TB dump (millions of files) each offset-log entry
-  * would re-serialize the whole census per trigger — O(total files)
-  * write amplification the index encoding removes. Exactly-once
-  * survives unchanged: a batch is the persisted delta (start, end],
-  * so recovery replans precisely the logged files; a delta written by
-  * a run that crashed before the engine committed its batch is found
-  * as an orphan (log ahead of the restart offset) and replayed before
-  * any new file is admitted. Pre-r11 list-shaped checkpoints are not
-  * readable (deserializeOffset refuses them loudly).
-  *
-  * Directory pruning applies at LISTING time — but (r12 correction of
-  * an r11 overclaim, verified by probe) NOT via query filters:
-  * Spark's micro-batch planner never runs DSv2 filter pushdown, so a
-  * streaming `.filter(col("event_type") === ...)` is evaluated
-  * post-scan and the census admits everything. A one-type or
-  * time-banded subscription must be declared as READER OPTIONS
-  * (`eventTypes`, `tsMin`/`tsMax` — the Kafka subscribe/startingOffsets
-  * model, see [[WireTable.newScanBuilder]]); those feed the same
-  * pruning machinery and keep ignored partitions/bands out of the
-  * census and the offset log entirely (spec-pinned on the delta log's
-  * admitted paths).
-  *
-  * Admission control ([[streaming.SupportsAdmissionControl]]):
-  * `maxFilesPerTrigger` caps each micro-batch at N unseen files — the
-  * file-source spelling of Kafka's `maxOffsetsPerTrigger` (W9 rate
-  * limiting), so a restart against a deep backlog catches up in
-  * bounded batches instead of one giant one.
-  *
-  * [[streaming.SupportsTriggerAvailableNow]] matters for CORRECTNESS,
-  * not just convenience: without it Spark downgrades
-  * `Trigger.AvailableNow` to single-batch (Trigger.Once) execution,
-  * which skips the no-data flush batch that emits watermark-finalized
-  * windows — an append-mode sink would then hold every window of the
-  * run in state and emit NOTHING (observed: dual-sink parity test,
-  * wire run 1 emitted 0 of 490 finalized windows before this was
-  * implemented). The implementation snapshots the census once at
-  * `prepareForTriggerAvailableNow` and serves batches (rate-limited
-  * ones included) only up to that snapshot.
-  */
-private[sources] class WireMicroBatchStream(
-    path: String,
-    maxSplitBytes: Long,
-    pushed: Array[Filter],
-    required: StructType,
-    checkpointLocation: String,
-    maxFilesPerTrigger: Option[Int] = None)
-    extends MicroBatchStream
-    with streaming.SupportsAdmissionControl
-    with streaming.SupportsTriggerAvailableNow {
-
-  /** One directory listing per trigger, not two: `latestOffset` takes
-    * the census to find fresh files and `planInputPartitions` needs
-    * the same census to re-derive (partition value, length) for the
-    * admitted paths — at a 100 TB dump (millions of files) a second
-    * full listing per micro-batch doubles the steady-state listing
-    * cost for nothing, so the last census is memoized and
-    * `censusCovering` re-lists only when it does not cover the
-    * requested paths (the restart-replay case, where
-    * planInputPartitions runs before any latestOffset call). */
-  @volatile private var lastCensus: Seq[(String, String, Long)] = null
-
-  private def census(): Seq[(String, String, Long)] = {
-    val c = WireEvents.listWireFiles(path, pushed)
-    lastCensus = c
-    c
-  }
-
-  private def censusCovering(paths: Seq[String]): Seq[(String, String, Long)] = {
-    val cached = lastCensus
-    if (cached != null && paths.forall(cached.map(_._2).toSet)) cached
-    else census()
-  }
-
-  private lazy val log = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val dir = new HPath(checkpointLocation, "wire-file-log")
-    new WireFileLog(dir.getFileSystem(conf), dir)
-  }
-
-  // census snapshot taken when the AvailableNow run starts; batches
-  // never read past it even if files keep landing mid-run
-  @volatile private var availableNowCap: Option[Seq[String]] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(census().map(_._2).sorted)
-
-  override def getDefaultReadLimit: streaming.ReadLimit =
-    maxFilesPerTrigger
-      .map(n => streaming.ReadLimit.maxFiles(n))
-      .getOrElse(streaming.ReadLimit.allAvailable())
-
-  override def initialOffset(): streaming.Offset = WireLogOffset(0L)
-
-  override def latestOffset(): streaming.Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) is the admission-control entry point")
-
-  override def latestOffset(start: streaming.Offset, limit: streaming.ReadLimit): streaming.Offset = {
-    val startIdx = start.asInstanceOf[WireLogOffset].idx
-    // orphan replay first: a delta logged by a run that crashed before
-    // the ENGINE committed its batch must re-emerge as the next batch
-    // (same files, deterministically) before anything new is admitted
-    if (log.maxIdx() > startIdx) return WireLogOffset(startIdx + 1)
-    val visible = availableNowCap.getOrElse(census().map(_._2).sorted)
-    val fresh = visible.filterNot(log.seenUpTo(startIdx))
-    val admitted = limit match {
-      case mf: streaming.ReadMaxFiles => fresh.take(mf.maxFiles)
-      case _ => fresh
-    }
-    if (admitted.isEmpty) WireLogOffset(startIdx)
-    else {
-      log.append(startIdx + 1, admitted)
-      WireLogOffset(startIdx + 1)
-    }
-  }
-
-  override def reportLatestOffset(): streaming.Offset =
-    WireLogOffset(log.maxIdx())
-
-  override def deserializeOffset(json: String): streaming.Offset =
-    WireLogOffset.fromJson(json)
-
-  override def planInputPartitions(
-      start: streaming.Offset,
-      end: streaming.Offset): Array[InputPartition] = {
-    val a = start.asInstanceOf[WireLogOffset].idx
-    val b = end.asInstanceOf[WireLogOffset].idx
-    val fresh = ((a + 1) to b).flatMap(log.readDelta)
-    if (fresh.isEmpty) return Array.empty
-    // re-derive (partition value, length) for the fresh paths; a file
-    // present in a committed delta but vanished from the census is a
-    // contract violation (immutable-once-visible), surfaced loudly
-    val byPath = censusCovering(fresh).map { case (v, p, len) => p -> ((v, len)) }.toMap
-    WireEvents.splitsOf(
-      fresh.map { p =>
-        val (v, len) = byPath.getOrElse(p, throw new IllegalStateException(
-          s"wire-events: file in committed offset range disappeared: $p"))
-        (v, p, len)
-      },
-      maxSplitBytes)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WireReaderFactory(required.fields.map(_.name))
-
-  override def commit(end: streaming.Offset): Unit =
-    log.pruneCommitted(end.asInstanceOf[WireLogOffset].idx)
-  override def stop(): Unit = ()
-}
-
-/** Offset = index into the source's [[WireFileLog]]; O(1) however
-  * large the consumed census grows. */
-private[sources] case class WireLogOffset(idx: Long)
-    extends streaming.Offset {
-  override def json(): String = s"""{"idx":$idx}"""
-}
-
-private[sources] object WireLogOffset {
-  def fromJson(s: String): WireLogOffset = {
-    val n = new ObjectMapper().readTree(s)
-    require(n != null && n.has("idx"),
-      "wire-events: offset is not a file-log index — pre-r11 list-shaped " +
-        "wire checkpoints are not readable by this version; start the query " +
-        "from a fresh checkpoint")
-    WireLogOffset(n.get("idx").asLong())
-  }
-}
-
-/** The source-side file-census log: `<dir>/N.delta` names exactly the
-  * files admitted into batch N (one path per line, UTF-8, sorted);
-  * every [[WireFileLog.CompactInterval]]-th entry also writes
-  * `<dir>/N.snapshot` = the union of deltas 1..N, so [[seenUpTo]]
-  * reads one snapshot plus at most CompactInterval-1 deltas instead
-  * of the whole history (FileStreamSource's compaction scheme with
-  * the snapshot kept as a SEPARATE file, which keeps [[readDelta]] —
-  * the replay path — trivially O(batch)).
-  *
-  * Durability contract: [[append]] writes to a temp name and RENAMES
-  * into place (atomic on HDFS-like stores), and an already-present
-  * delta is trusted rather than rewritten — that idempotency is what
-  * makes crash-replay deterministic. */
-private[graft] class WireFileLog(fs: FileSystem, dir: HPath) {
-  import WireFileLog.CompactInterval
-  fs.mkdirs(dir)
-
-  private def deltaPath(i: Long) = new HPath(dir, f"$i%020d.delta")
-  private def snapPath(i: Long) = new HPath(dir, f"$i%020d.snapshot")
-
-  private def readLines(p: HPath): Seq[String] = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-  }
-
-  private def writeLines(p: HPath, lines: Seq[String]): Unit = {
-    if (fs.exists(p)) return // idempotent replay: trust the committed entry
-    val tmp = new HPath(dir, s".${p.getName}.${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      // lost a benign race with a concurrent replay writer: the entry
-      // now exists with identical deterministic content
-      require(fs.exists(p), s"wire-file-log: failed to commit ${p.getName}")
-    }
-  }
-
-  def maxIdx(): Long =
-    if (!fs.exists(dir)) 0L
-    else fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collect {
-        case n if n.endsWith(".delta") => n.stripSuffix(".delta").toLong
-        // a fully-pruned log (retention removed every delta at a
-        // snapshot boundary) still knows its high-water mark
-        case n if n.endsWith(".snapshot") => n.stripSuffix(".snapshot").toLong
-      }
-      .foldLeft(0L)(math.max)
-
-  def readDelta(i: Long): Seq[String] = readLines(deltaPath(i))
-
-  /** Union of deltas 1..i — one snapshot read plus a bounded delta
-    * tail.
-    *
-    * The base snapshot is the NEWEST one that exists at or below i's
-    * boundary, not only the exact boundary (r14 review): a crash
-    * between [[append]]'s delta write and its snapshot write leaves
-    * that boundary snapshot missing FOREVER — the engine replays the
-    * batch from the delta and never re-invokes append — and the old
-    * spelling then demanded deltas 1..boundary, which retention had
-    * already pruned: the log bricked even though an older retained
-    * snapshot plus the retained delta tail fully covered the range.
-    * With the walk-back the log SELF-HEALS: retention keeps everything
-    * above the newest snapshot (pruneCommitted no-ops while the
-    * boundary snapshot is absent), reads pay at most one extra
-    * CompactInterval of deltas, and the next boundary append writes a
-    * fresh snapshot, restoring the steady state. A missing DELTA in
-    * the tail still refuses loudly — silently recounting from a
-    * partial log would un-see consumed files. */
-  def seenUpTo(i: Long): Set[String] = {
-    if (i <= 0) return Set.empty
-    var snapBase = (i / CompactInterval) * CompactInterval
-    while (snapBase > 0 && !fs.exists(snapPath(snapBase)))
-      snapBase -= CompactInterval
-    val base: Set[String] =
-      if (snapBase > 0) readLines(snapPath(snapBase)).toSet else Set.empty
-    val missing = ((snapBase + 1) to i).filterNot(j => fs.exists(deltaPath(j)))
-    require(missing.isEmpty,
-      s"wire-file-log: no snapshot covers ${missing.head} and delta(s) " +
-        s"${missing.take(3).mkString(",")}… already pruned — log unrecoverable")
-    base ++ ((snapBase + 1) to i).flatMap(readDelta)
-  }
-
-  def append(i: Long, files: Seq[String]): Unit = {
-    writeLines(deltaPath(i), files.sorted)
-    if (i % CompactInterval == 0)
-      writeLines(snapPath(i), (seenUpTo(i - 1) ++ files).toSeq.sorted)
-  }
-
-  /** Retention, called from the stream's `commit(end)`: once the
-    * engine has durably committed batch `end`, no replay can start at
-    * or below it — `planInputPartitions` only reads deltas ABOVE the
-    * restart offset, and [[seenUpTo]] for any i >= end reads the
-    * newest snapshot plus the tail after it. So deltas at or below
-    * the last snapshot <= end, and snapshots older than it, are dead
-    * state: delete them. Bounds the log at ONE snapshot + at most
-    * [[WireFileLog.CompactInterval]]-1 tail deltas + the engine's
-    * uncommitted window — flat in stream lifetime, the property that
-    * matters on a months-running 100 TB tail. */
-  def pruneCommitted(end: Long): Unit = {
-    val snapIdx = (end / CompactInterval) * CompactInterval
-    if (snapIdx <= 0 || !fs.exists(snapPath(snapIdx))) return
-    fs.listStatus(dir).foreach { st =>
-      val n = st.getPath.getName
-      val deadDelta =
-        n.endsWith(".delta") && n.stripSuffix(".delta").toLong <= snapIdx
-      val deadSnap =
-        n.endsWith(".snapshot") && n.stripSuffix(".snapshot").toLong < snapIdx
-      if (deadDelta || deadSnap) fs.delete(st.getPath, false)
-    }
-  }
-}
-
-private[graft] object WireFileLog {
-  /** Snapshot cadence: seenUpTo reads <= 1 snapshot + 9 deltas. */
-  val CompactInterval = 10L
-}
-
 /** One byte range of one wire file; `eventType` is the value encoded in
   * the enclosing partition directory (null = default-partition dir). */
 private[sources] case class WirePartition(
     path: String, start: Long, length: Long, eventType: String)
     extends InputPartition
 
-/** Built on the DRIVER (both batch and micro-batch paths), so the
-  * session's hadoopConfiguration is captured here and shipped inside
-  * the serialized factory — `spark.hadoop.*` settings (object-store
-  * credentials, fs tuning) reach every executor-side reader, the same
-  * contract Spark's own file sources keep by broadcasting the session
-  * conf. A fresh default `Configuration()` on the executor would list
-  * fine locally and fail task-side on any store configured via
-  * SparkConf. */
+/** Built on the DRIVER, so the session's hadoopConfiguration is
+  * captured here and shipped inside the serialized factory —
+  * `spark.hadoop.*` settings (object-store credentials, fs tuning)
+  * reach every executor-side reader, the same contract Spark's own
+  * file sources keep by broadcasting the session conf. A fresh
+  * default `Configuration()` on the executor would list fine locally
+  * and fail task-side on any store configured via SparkConf. */
 private[sources] class WireReaderFactory(requiredCols: Array[String])
     extends PartitionReaderFactory {
   private val conf = new org.apache.spark.util.SerializableConfiguration(
@@ -757,6 +382,27 @@ private[sources] class WireReader(
 object WireEvents {
   val DefaultMaxSplitBytes: Long = 4L * 1024 * 1024
 
+  /** The one rule for which predicates the layout prunes on: the
+    * column a predicate prunes by, or None. An `event_type` predicate
+    * is answered exactly by the directory names ([[survives]]), so the
+    * scan handles it fully; a `ts` predicate prunes whole files through
+    * their first/last-line band ([[tsBounds]], [[tsInSet]]), which is
+    * coarse, so it also stays residual. Only string literals compare
+    * against the layout's strings. Planning's pushdown and the
+    * runtime (DPP) filters both read this rule. */
+  private[sources] def prunedBy(f: Filter): Option[String] = {
+    def strings(vs: Array[Any]) = vs.forall(v => v == null || v.isInstanceOf[String])
+    f match {
+      case EqualTo("event_type", _: String) | IsNotNull("event_type") => Some("event_type")
+      case In("event_type", vs) if strings(vs) => Some("event_type")
+      case GreaterThan("ts", _: String) | GreaterThanOrEqual("ts", _: String) |
+           LessThan("ts", _: String) | LessThanOrEqual("ts", _: String) |
+           EqualTo("ts", _: String) => Some("ts")
+      case In("ts", vs) if strings(vs) => Some("ts")
+      case _ => None
+    }
+  }
+
   /** Does the directory-encoded partition value survive every pushed
     * filter? (null = the Hive default-partition sentinel dir.)
     *
@@ -856,17 +502,14 @@ object WireEvents {
   /** Driver-side memo of probe results keyed (path, length): files
     * are immutable once visible (the source contract), so a (path, len)
     * pair determines (min ts, max ts) forever. Planning the same read
-    * twice, and every trigger of a streaming census under a ts-band
-    * subscription, then opens no file it already probed — without the
-    * memo each trigger would re-open every file in the listing,
-    * including long-consumed ones. Per-entry memory is ~150 B — but the
-    * map outlives any one query or trigger (it is JVM-scoped, shared
-    * across layouts), so a long-lived streaming driver would otherwise
-    * accumulate entries for files consumed months ago: [[probeMemo]]
+    * twice then opens no file it already probed. Per-entry memory is
+    * ~150 B — but the map outlives any one query (it is JVM-scoped,
+    * shared across layouts), so a long-lived driver would otherwise
+    * accumulate entries for files read months ago: [[probeMemo]]
     * bounds it as an access-order LRU. An LRU, not a drop-at-cap (ADVICE
     * r13): the old check-then-clear raced (concurrent callers could
     * overshoot the cap) and a wholesale clear discarded every LIVE entry
-    * at once, turning the next census into a synchronized re-probe wave
+    * at once, turning the next plan into a synchronized re-probe wave
     * of every file; evicting only the eldest keeps the hot tail
     * memoized at all times. */
   private val probeCache = java.util.Collections.synchronizedMap(
@@ -877,8 +520,8 @@ object WireEvents {
           : Boolean = size() > probeCacheCap
     })
 
-  /** [[probeCache]] upper bound: 64k entries ≈ 10 MB — generous next
-    * to the per-trigger census listing, tiny next to driver heap. */
+  /** [[probeCache]] upper bound: 64k entries ≈ 10 MB — tiny next to
+    * driver heap. */
   private[graft] val probeCacheCap = 65536
 
   private[graft] def probeMemo(key: (String, Long))(
@@ -897,8 +540,8 @@ object WireEvents {
     * in a surviving `event_type=` directory, in listing order; empty
     * when the root does not exist. A data file is a plain file without a
     * `_`/`.` prefix, so `_SUCCESS`, commit temps and any other
-    * underscore file never list, nor open. Shared by the batch scan
-    * (planning + statistics) and the micro-batch stream (offsets).
+    * underscore file never list, nor open. The scan lists once per
+    * filter state for planning and statistics.
     *
     * When a ts bound or key set was pushed, whole files outside it are
     * dropped here via the sorted-file min/max ([[fileTsRange]] through

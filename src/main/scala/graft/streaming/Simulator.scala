@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** NiFi-flow replacement (reference Active_Users_Pipeline.xml): turns
@@ -26,23 +26,16 @@ object Simulator {
     require(tz == "UTC",
       s"productViewJson renders wall-clock + '+0000': session time zone " +
       s"must be UTC, got '$tz'")
-    events.select(productViewLine.as("value"))
+    events.select(to_json(struct(
+      lit("ProductView").as("event"),
+      concat(lit("msg-"), col("event_id")).as("messageid"),
+      concat(lit("user-"), col("user_id")).as("userid"),
+      struct(concat(lit("product-"), pmod(col("event_id"), lit(100)))
+        .as("productid")).as("properties"),
+      struct(col("event_type").as("source")).as("context"),
+      concat(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSS"), lit("+0000"))
+        .as("timestamp"))).as("value"))
   }
-
-  /** The ProductView wire line as a COLUMN over the events schema —
-    * usable where the payload must ride another frame's columns (e.g.
-    * the wire-events transport carrying the payload in `props` for
-    * transport-parity tests). Callers inherit [[productViewJson]]'s
-    * UTC-session precondition. */
-  def productViewLine: Column = to_json(struct(
-    lit("ProductView").as("event"),
-    concat(lit("msg-"), col("event_id")).as("messageid"),
-    concat(lit("user-"), col("user_id")).as("userid"),
-    struct(concat(lit("product-"), pmod(col("event_id"), lit(100)))
-      .as("productid")).as("properties"),
-    struct(col("event_type").as("source")).as("context"),
-    concat(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSS"), lit("+0000"))
-      .as("timestamp")))
 
   /** A raw JSON *array* payload (the reference's on-disk input shape,
     * README.md:7) — exercised by [[splitJsonArray]]. */

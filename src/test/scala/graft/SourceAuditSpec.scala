@@ -43,13 +43,15 @@ class SourceAuditSpec extends AnyFunSuite {
         s"bounded/justified entry, or remove: ${extra.mkString("; ")}")
   }
 
-  /** The first `needle` in `file`, if any, sits inside `def name`. */
-  private def assertInsideDef(file: String, needle: String, name: String): Unit = {
+  /** Every `needle` in `file` sits inside one of the `def`s named. */
+  private def assertInsideDef(file: String, needle: String, names: String*): Unit = {
     val src = Files.readString(root.resolve(file))
-    val at = src.indexOf(needle)
-    val enclosing = """def (\w+)""".r.findAllMatchIn(src.take(at)).toSeq.lastOption.map(_.group(1))
-    assert(at < 0 || enclosing.contains(name),
-      s"$file has $needle in ${enclosing.getOrElse("no def")}, not $name")
+    Iterator.iterate(src.indexOf(needle))(at => src.indexOf(needle, at + 1))
+      .takeWhile(_ >= 0).foreach { at =>
+        val enclosing = """def (\w+)""".r.findAllMatchIn(src.take(at)).toSeq.lastOption.map(_.group(1))
+        assert(enclosing.exists(names.contains),
+          s"$file has $needle in ${enclosing.getOrElse("no def")}, not ${names.mkString(" or ")}")
+      }
   }
 
   test("driver-side .collect() confined to audited bounded sites") {
@@ -156,6 +158,19 @@ class SourceAuditSpec extends AnyFunSuite {
     val file = "streaming/ProductViewPipeline.scala"
     audit(".start()", """\.start\(\)""", Map(file -> (1, "startWithStateStores")))
     assertInsideDef(file, ".start()", "startWithStateStores")
+  }
+
+  test("streams read only through ProductViewPipeline.fileSource and kafkaSource") {
+    // Spark's file and Kafka sources keep their own offset logs and
+    // exactly-once replay; a MicroBatchStream of our own would repeat
+    // both, and a readStream elsewhere would bypass the two the
+    // pipeline, the apps and the benchmark share
+    val file = "streaming/ProductViewPipeline.scala"
+    audit("readStream", """\breadStream\b""", Map(file -> (2, "fileSource and kafkaSource")))
+    assertInsideDef(file, "readStream", "fileSource", "kafkaSource")
+    val stream = """(extends|with)\s+([\w.]+\.)?MicroBatchStream\b"""
+    assert(sites(stream, Paths.get("src/main/scala")).isEmpty,
+      s"src/main implements MicroBatchStream: ${sites(stream, Paths.get("src/main/scala"))}")
   }
 
   test("from_json only in Simulator.splitJsonArray: ProductViewParse parses the wire record") {
