@@ -152,9 +152,11 @@ class SourceAuditSpec extends AnyFunSuite {
   }
 
   test("DataStreamWriter.start() only inside ProductViewPipeline.startWithStateStores") {
-    // the one start path: it installs the checkpoint manager and sets
-    // the query's state-store count, so a query started elsewhere forks
-    // per checkpoint file and keeps the session's full partition count
+    // the one start path: it installs the checkpoint manager, sets the
+    // query's state-store count and turns off artifact isolation for the
+    // query, so a query started elsewhere forks per checkpoint file,
+    // keeps the session's full partition count and recompiles its
+    // generated classes every start
     val file = "streaming/ProductViewPipeline.scala"
     audit(".start()", """\.start\(\)""", Map(file -> (1, "startWithStateStores")))
     assertInsideDef(file, ".start()", "startWithStateStores")

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.scalatest.concurrent.Eventually.{eventually, timeout}
 import org.scalatest.time.{Seconds, Span}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MicroBatchExecution, StreamExecution, StreamingQueryWrapper}
@@ -504,10 +505,13 @@ class StreamingSpec extends SparkSpec {
     finally c.close()
     withShufflePartitions(32) {
       val counts = P.windowedCounts(P.parse(P.fileSource(spark, srcDir)))
+      val isolation = "spark.sql.artifact.isolation.enabled"
       def started(name: String, stores: Int = cores)(start: => Seq[StreamingQuery]): Unit = {
+        val isolated = spark.conf.get(isolation)
         val qs = start
         assert(spark.conf.get("spark.sql.shuffle.partitions") == "32",
           s"$name left the session conf changed")
+        assert(spark.conf.get(isolation) == isolated, s"$name left $isolation changed")
         qs.foreach { q =>
           q.awaitTermination()
           assert(stateStores(q) == stores, s"$name: ${stateStores(q)} state stores")
@@ -642,6 +646,20 @@ class StreamingSpec extends SparkSpec {
     assert(commands.exists(_.contains(canary)), s"the recording missed the canary: $commands")
     val forks = commands.filter(c => c.contains(s"$base/chk/") || c.contains(s"$base/out/_spark_metadata"))
     assert(forks.isEmpty, s"${forks.size} processes started under $base: ${forks.take(5)}")
+  }
+
+  test("a second drain over the same lineage compiles no generated code") {
+    // Janino's cache is keyed on (task thread's context classloader,
+    // code): a query started with artifact isolation runs its tasks
+    // under its own session's classloader and compiles every class again
+    val srcDir = twoFileInput()
+    drainDual(srcDir, tmp())
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = drainDual(srcDir, tmp())
+    val recompiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    Seq(second._1, second._2).foreach(q => assert(q.exception.isEmpty, s"${q.exception}"))
+    assert(second._1.recentProgress.map(_.numInputRows).sum == 60L, "second drain's input rows")
+    assert(recompiled == 0L, s"the second drain compiled $recompiled generated classes")
   }
 
   test("the local manager writes the same files, with the same modes, as Spark's default") {
